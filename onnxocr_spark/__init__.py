@@ -10,7 +10,7 @@ job over Iceberg/parquet tables of interleaved text+media documents.
 Architecture (see SURVEY.md §7):
 
     documents(doc_id, spans array<struct<kind,text,media_ref,offset>>)
-      → posexplode → route text/media → salted repartition (skew)
+      → explode → route text/media → round-robin repartition (skew)
       → mapInPandas(ocr_media)  [per-executor model sessions, Arrow batches]
       → unionByName → groupBy(doc_id).agg(sort_array(collect_list(...)))
       → sink (parquet/Iceberg-shaped) with progress ledger + metrics

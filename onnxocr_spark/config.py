@@ -39,8 +39,6 @@ class PipelineConfig:
     drop_score: float = 0.5
 
     # --- spark-side knobs (no reference analog; scale levers) ---
-    # salt buckets for the skew-balancing repartition before the OCR stage
-    salt_buckets: int = 64
     # rows per Arrow batch entering mapInPandas (rows carry image bytes,
     # so keep this small; see SURVEY.md §4 "physical execution")
     arrow_max_records: int = 32

@@ -12,42 +12,48 @@ from __future__ import annotations
 import numpy as np
 
 
+def _order_clockwise(pts: np.ndarray) -> np.ndarray:
+    """order_points_clockwise over a (N,4,2) float32 array at once.
+
+    Per box: TL/BR are the first argmin/argmax of x+y; the remaining
+    points keep their order (np.delete's, which drops one point when
+    argmin == argmax), and TR/BL are the first argmin/argmax of y−x
+    among them — masking the removed points with ∓inf keeps exactly
+    those first-occurrence ties."""
+    s = pts.sum(axis=2)
+    lo, hi = s.argmin(axis=1)[:, None], s.argmax(axis=1)[:, None]
+    k = np.arange(4)
+    removed = (k == lo) | (k == hi)
+    diff = pts[..., 1] - pts[..., 0]
+    tr = np.where(removed, np.inf, diff).argmin(axis=1)[:, None]
+    bl = np.where(removed, -np.inf, diff).argmax(axis=1)[:, None]
+    order = np.concatenate([lo, tr, hi, bl], axis=1)
+    return pts[np.arange(len(pts))[:, None], order]
+
+
 def order_points_clockwise(pts: np.ndarray) -> np.ndarray:
     """Order 4 points TL, TR, BR, BL by coordinate sum/diff argmin/argmax."""
-    rect = np.zeros((4, 2), dtype=np.float32)
-    s = pts.sum(axis=1)
-    rect[0] = pts[np.argmin(s)]
-    rect[2] = pts[np.argmax(s)]
-    tmp = np.delete(pts, (np.argmin(s), np.argmax(s)), axis=0)
-    diff = np.diff(tmp, axis=1)
-    rect[1] = tmp[np.argmin(diff)]
-    rect[3] = tmp[np.argmax(diff)]
-    return rect
+    return _order_clockwise(np.asarray(pts, dtype=np.float32)[None])[0]
 
 
 def clip_det_res(points: np.ndarray, img_h: int, img_w: int) -> np.ndarray:
-    """Clamp box coords to [0, w-1] × [0, h-1] (int-truncated)."""
-    out = points.copy()
-    for i in range(out.shape[0]):
-        out[i, 0] = int(min(max(out[i, 0], 0), img_w - 1))
-        out[i, 1] = int(min(max(out[i, 1], 0), img_h - 1))
-    return out
+    """Clamp box coords to [0, w-1] × [0, h-1] (int-truncated); any
+    leading shape, (…, 2)."""
+    hi = (img_w - 1, img_h - 1)
+    return np.minimum(np.maximum(points, 0), hi).astype(np.int64).astype(
+        points.dtype)
 
 
 def filter_tag_det_res(dt_boxes: np.ndarray, img_h: int, img_w: int) -> np.ndarray:
-    """Clockwise-order, clip, and drop degenerate (side ≤ 3 px) boxes."""
-    keep = []
-    for box in dt_boxes:
-        box = order_points_clockwise(np.asarray(box, dtype=np.float32))
-        box = clip_det_res(box, img_h, img_w)
-        rect_w = int(np.linalg.norm(box[0] - box[1]))
-        rect_h = int(np.linalg.norm(box[0] - box[3]))
-        if rect_w <= 3 or rect_h <= 3:
-            continue
-        keep.append(box)
-    if not keep:
-        return np.zeros((0, 4, 2), dtype=np.float32)
-    return np.stack(keep)
+    """Clockwise-order, clip, and drop degenerate (side ≤ 3 px) boxes —
+    over all boxes at once."""
+    boxes = np.asarray(dt_boxes, dtype=np.float32).reshape(-1, 4, 2)
+    boxes = clip_det_res(_order_clockwise(boxes), img_h, img_w)
+    # |p0p1| and |p0p3| with np.linalg.norm's float32 steps;
+    # int(length) > 3 ⇔ length ≥ 4
+    side = boxes[:, 1::2] - boxes[:, :1]
+    side = np.sqrt((side * side).sum(axis=2))
+    return boxes[(side[:, 0] >= 4) & (side[:, 1] >= 4)]
 
 
 def sorted_boxes(dt_boxes: np.ndarray) -> list[np.ndarray]:

@@ -1,10 +1,10 @@
 """The end-to-end extraction job (SURVEY.md §7.1).
 
     documents(doc_id, spans array<struct<kind,text,media_ref,offset>>)
-      │ posexplode(spans)
+      │ explode(spans)
       ├─ kind='text'  ───────────── pass through ───────────────┐
       ▼ kind='media'                                            │
-    salted repartition (deterministic salt from media_ref)      │
+    round-robin repartition (keyless, equal rows per task)      │
       ▼ mapInPandas(ocr_media) — per-executor model sessions    │
     (doc_id, offset, 'media', media_ref, text=OCR)──────────────┤
                                                                 ▼
@@ -15,11 +15,12 @@
 
 Scale notes (local[32] here; designed for 1000 executors / 100 TB):
 - Pixels never cross a shuffle: media stays a reference through the
-  salted repartition; decode happens inside the UDF; only text + small
-  metadata flow out.
-- Skew: heavy-media docs are spread across tasks by salting on
-  xxhash64(media_ref) — a pure function, so retries are deterministic
-  and reassembly (keyed by doc_id+offset) is unaffected. AQE cannot see
+  round-robin repartition; decode happens inside the UDF; only text +
+  small metadata flow out.
+- Skew: a keyless round-robin repartition deals media rows out ±1 per
+  task, so a heavy doc's consecutive media spans land in different
+  tasks; retries are deterministic (sortBeforeRepartition) and
+  reassembly (keyed by doc_id+offset) is unaffected. AQE cannot see
   UDF-stage cost, hence the explicit repartition.
 - The final groupBy(doc_id) shuffles only recognized text (~KB/doc).
 - Text spans take the short path: no UDF, no extra shuffle before the
@@ -348,13 +349,15 @@ def build_session(
         # cluster these are per-executor settings in spark-submit)
         b.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # don't hold task slots idle waiting for data locality — in
-        # local mode (and with salted repartitions generally) the wait
+        # local mode (and after any repartition generally) the wait
         # only stalls the UDF stage behind cached/shuffled partitions
         .config("spark.locality.wait", "0s")
-        # the OCR stage round-robins on a P-valued modular index via a
-        # range exchange; the default 100 samples/partition mis-places
-        # boundaries over so few distinct values (observed 0..2x row
-        # skew) — sample enough that every value gets its own range
+        # the opt-in cost-balanced OCR stage (cfg.ocr_cost_col) range-
+        # partitions on a P-valued bin index; the default 100 samples/
+        # partition mis-places boundaries over so few distinct values
+        # (observed 0..2x row skew) — sample enough that every value
+        # gets its own range. The default path is a keyless round-robin
+        # and samples nothing.
         .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "5000")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -26,7 +26,18 @@ import json
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# one row per landed data file with at least one span
+_PART_METRICS = pa.schema([
+    ("data_file", pa.string()),
+    ("spans", pa.int64()),
+    ("media_spans", pa.int64()),
+    ("empty_media_spans", pa.int64()),
+    ("chars", pa.int64()),
+    ("run_id", pa.string()),
+])
 
 
 def _data_path(root: str) -> str:
@@ -57,56 +68,57 @@ def write_with_ledger(
     ledger_dir = os.path.join(_ledger_path(root), f"run={run_id}")
     landed.select("doc_id").distinct().write.mode("overwrite").parquet(ledger_dir)
 
-    n_docs = landed.count()
-    n_spans, n_media, n_empty_media = (
-        landed.select(F.explode("spans").alias("s"))
-        .agg(
-            F.count("*"),
-            F.sum(F.when(F.col("s.kind") == "media", 1).otherwise(0)),
-            F.sum(
-                F.when(
-                    (F.col("s.kind") == "media") & (F.col("s.text") == ""), 1
-                ).otherwise(0)
-            ),
-        )
-        .first()
-    )
-    # per-partition OCR metrics for this commit (north rule: every
-    # partition commit records lineage + metrics): one row per landed
-    # DATA FILE — input_file_name() is the on-disk partition identity
+    # per-data-file metrics for this commit (north rule: every
+    # partition commit records lineage + metrics), derived from what
+    # landed in ONE aggregate pass; the run totals are sums of its rows.
+    # input_file_name() is the on-disk partition identity
     # (spark_partition_id() on a re-read is the scan-split id, which
     # packs small files / splits large ones and so over/under-counts);
     # at Iceberg these rows fold into per-data-file column stats /
-    # snapshot summary entries
-    part_metrics = (
-        landed.withColumn("data_file", F.input_file_name())
-        .select("data_file", F.explode("spans").alias("s"))
+    # snapshot summary entries. posexplode_outer keeps docs whose spans
+    # array is empty or null as one row with a null pos, so every doc
+    # has exactly one row with pos null or 0.
+    is_media = F.col("s.kind") == "media"
+    files = (
+        landed.select(
+            F.input_file_name().alias("data_file"),
+            F.posexplode_outer("spans").alias("pos", "s"),
+        )
         .groupBy("data_file")
         .agg(
-            F.count("*").alias("spans"),
-            F.sum(F.when(F.col("s.kind") == "media", 1).otherwise(0)).alias(
-                "media_spans"
-            ),
+            F.count(F.when(F.coalesce("pos", F.lit(0)) == 0, 1)).alias("docs"),
+            F.count("pos").alias("spans"),
+            F.sum(F.when(is_media, 1).otherwise(0)).alias("media_spans"),
             F.sum(
-                F.when(
-                    (F.col("s.kind") == "media") & (F.col("s.text") == ""), 1
-                ).otherwise(0)
+                F.when(is_media & (F.col("s.text") == ""), 1).otherwise(0)
             ).alias("empty_media_spans"),
             F.sum(F.length("s.text")).alias("chars"),
         )
-        .withColumn("run_id", F.lit(run_id))
+        .collect()
+    )
+    # a file of span-less docs gets no metrics row (as a plain explode
+    # would give), but its docs still count. The rows go back as an
+    # Arrow table: a list of tuples would start Python workers to
+    # unpickle them.
+    part = [f for f in files if f.spans]
+    table = pa.Table.from_pydict(
+        {
+            **{c: [f[c] for f in part] for c in _PART_METRICS.names[:-1]},
+            "run_id": [run_id] * len(part),
+        },
+        schema=_PART_METRICS,
     )
     part_dir = os.path.join(root, "metrics", f"run={run_id}")
-    part_metrics.write.mode("overwrite").parquet(part_dir)
+    spark.createDataFrame(table).write.mode("overwrite").parquet(part_dir)
 
     metrics = {
         "run_id": run_id,
         "source_path": source_path,
-        "docs": n_docs,
-        "spans": int(n_spans or 0),
-        "media_spans": int(n_media or 0),
-        "empty_media_spans": int(n_empty_media or 0),
-        "n_partitions": part_metrics.count(),
+        "docs": sum(f.docs for f in files),
+        "spans": sum(f.spans for f in files),
+        "media_spans": sum(f.media_spans for f in files),
+        "empty_media_spans": sum(f.empty_media_spans for f in files),
+        "n_partitions": len(part),
         "wall_clock_unix": time.time(),
     }
     # JSON sidecars live under a leading-underscore subdir so a parquet

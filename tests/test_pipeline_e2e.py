@@ -831,6 +831,62 @@ def test_ledger_per_partition_metrics(spark, docs_df, tmp_path):
     assert sidecar["docs"] == m["docs"]
 
 
+def test_ledger_commit_metrics_match_explode_recount(spark, tmp_path):
+    """The commit derives every metric from ONE per-data-file aggregate
+    of what landed; it must equal the plain recount: count() for docs,
+    an explode aggregate for span totals, an explode groupBy per data
+    file for the metrics rows — with docs whose spans array is empty or
+    null, a null span, a null text, and a data file holding only
+    span-less docs (no metrics row, but its docs count)."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from onnxocr_spark.sinks import write_with_ledger
+
+    schema = ("doc_id string, spans array<struct<kind:string,text:string,"
+              "media_ref:string,offset:int>>")
+    rows = []
+    for i in range(30):
+        spans = [
+            None,
+            [],
+            [("text", "hi", None, 0), ("media", "", "m", 1)],
+            [("media", None, "m", 0), None],
+            [("media", "abc" * i, "m", j) for j in range(i % 4 + 1)],
+        ][i % 5]
+        rows.append((f"d{i:03d}", spans))
+    df = spark.createDataFrame(rows, schema).repartition(4, "doc_id")
+    spanless = spark.createDataFrame([("e1", []), ("e2", None)], schema)
+    root = str(tmp_path / "out")
+    m = write_with_ledger(df.unionByName(spanless.coalesce(1)), root, "x1")
+
+    landed = spark.read.parquet(f"{root}/data/run=x1")
+    s = F.explode("spans").alias("s")
+    media = F.when(F.col("s.kind") == "media", 1).otherwise(0)
+    empty = F.when((F.col("s.kind") == "media") & (F.col("s.text") == ""),
+                   1).otherwise(0)
+    n_spans, n_media, n_empty = landed.select(s).agg(
+        F.count("*"), F.sum(media), F.sum(empty)).first()
+    want_rows = sorted(
+        tuple(r) for r in landed.select(F.input_file_name().alias("f"), s)
+        .groupBy("f").agg(F.count("*"), F.sum(media), F.sum(empty),
+                          F.sum(F.length("s.text")))
+        .collect()
+    )
+    got = spark.read.parquet(f"{root}/metrics/run=x1")
+    assert got.columns == ["data_file", "spans", "media_spans",
+                           "empty_media_spans", "chars", "run_id"]
+    assert sorted(tuple(r)[:5] for r in got.collect()) == want_rows
+    assert {r.run_id for r in got.collect()} == {"x1"}
+    assert len(want_rows) < landed.select(F.input_file_name()).distinct().count()
+    side = json.load(open(f"{root}/metrics/_sidecars/run_x1.json"))
+    for d in (m, side):
+        assert (d["docs"], d["spans"], d["media_spans"],
+                d["empty_media_spans"], d["n_partitions"]) == (
+            32, n_spans, n_media, n_empty, len(want_rows))
+
+
 def test_compact_runs_merges_history_and_survives_crash_windows(
     spark, docs_df, tmp_path
 ):

@@ -213,3 +213,125 @@ def test_multipart_roundtrip_any_payload(boundary, payloads, data):
         body, f"multipart/form-data; boundary={boundary}"
     )
     assert [(f"file{i}.bin", p) for i, p in enumerate(payloads)] == parts
+
+
+# ------------------------------------------------ connected-component labeling
+def _flood_fill_components(mask):
+    """Naive oracle: BFS over 8-neighbour pixels → per component its
+    (ymin, xmin) start, run-endpoint point set and row-major runs."""
+    from collections import deque
+
+    h, w = mask.shape
+    seen = np.zeros_like(mask, dtype=bool)
+    comps = []
+    for y0 in range(h):
+        for x0 in range(w):
+            if not mask[y0, x0] or seen[y0, x0]:
+                continue
+            pixels = []
+            seen[y0, x0] = True
+            todo = deque([(y0, x0)])
+            while todo:
+                y, x = todo.popleft()
+                pixels.append((y, x))
+                for dy in (-1, 0, 1):
+                    for dx in (-1, 0, 1):
+                        ny, nx = y + dy, x + dx
+                        if (0 <= ny < h and 0 <= nx < w and mask[ny, nx]
+                                and not seen[ny, nx]):
+                            seen[ny, nx] = True
+                            todo.append((ny, nx))
+            pixels.sort()
+            runs = []
+            for y, x in pixels:
+                if runs and runs[-1][0] == y and runs[-1][2] == x:
+                    runs[-1] = (y, runs[-1][1], x + 1)
+                else:
+                    runs.append((y, x, x + 1))
+            points = {(float(s), float(y)) for y, s, _ in runs} | {
+                (float(e - 1), float(y)) for y, _, e in runs}
+            comps.append((pixels[0], points, runs))
+    return sorted(comps, key=lambda c: c[0])
+
+
+def _assert_labeling_matches_oracle(mask):
+    from onnxocr_spark.kernels.dbpostprocess import (
+        connected_components,
+        connected_components_with_runs,
+    )
+
+    got = connected_components_with_runs(mask)
+    want = _flood_fill_components(mask)
+    assert len(got) == len(want)
+    for (pts, runs), (start, points, exp_runs) in zip(got, want):
+        assert pts.dtype == np.float32 and pts.shape == (2 * len(runs), 2)
+        assert (runs[0][0], runs[0][1]) == start
+        assert {tuple(p) for p in pts.tolist()} == points
+        assert runs == exp_runs
+    assert [p.tolist() for p in connected_components(mask)] == [
+        p.tolist() for p, _ in got]
+
+
+@given(
+    h=st.integers(1, 24),
+    w=st.integers(1, 24),
+    density=st.floats(0.05, 0.95),
+    seed=st.integers(0, 2**31 - 1),
+)
+@settings(max_examples=60, deadline=None)
+def test_labeling_matches_flood_fill_random(h, w, density, seed):
+    rng = np.random.RandomState(seed)
+    _assert_labeling_matches_oracle(rng.random_sample((h, w)) < density)
+
+
+@given(
+    h=st.integers(1, 20),
+    w=st.integers(2, 20),
+    seed=st.integers(0, 2**31 - 1),
+)
+@settings(**SETTINGS)
+def test_labeling_runs_touching_frame_columns(h, w, seed):
+    """Runs that start in column 0 or end in column W−1 — the cells the
+    boundary scan pads on each side."""
+    rng = np.random.RandomState(seed)
+    mask = rng.random_sample((h, w)) < 0.4
+    mask[:, 0] = rng.random_sample(h) < 0.7
+    mask[:, -1] = rng.random_sample(h) < 0.7
+    _assert_labeling_matches_oracle(mask)
+
+
+@given(
+    n=st.integers(1, 16),
+    step=st.integers(2, 4),
+    shift=st.integers(0, 3),
+    anti=st.booleans(),
+)
+@settings(**SETTINGS)
+def test_labeling_diagonal_only_contacts(n, step, shift, anti):
+    """Pixels that touch only at corners: diagonal lines and a
+    checkerboard are single 8-connected components."""
+    diag = np.zeros((n, n + shift), dtype=bool)
+    idx = np.arange(n)
+    diag[idx, (n - 1 - idx if anti else idx) + shift] = True
+    _assert_labeling_matches_oracle(diag)
+    board = (np.add.outer(np.arange(n), np.arange(n + shift)) % 2) == 0
+    _assert_labeling_matches_oracle(board)
+    # diagonal pairs separated by `step`-1 empty columns stay separate
+    sparse = np.zeros((n, n * step), dtype=bool)
+    sparse[idx, idx * step] = True
+    _assert_labeling_matches_oracle(sparse)
+
+
+@given(n=st.integers(1, 40), seed=st.integers(0, 2**31 - 1))
+@settings(**SETTINGS)
+def test_labeling_degenerate_shapes(n, seed):
+    rng = np.random.RandomState(seed)
+    for mask in (
+        np.zeros((n, n), dtype=bool),
+        np.ones((n, n), dtype=bool),
+        rng.random_sample((1, n)) < 0.5,
+        rng.random_sample((n, 1)) < 0.5,
+        np.ones((1, n), dtype=bool),
+        np.ones((n, 1), dtype=bool),
+    ):
+        _assert_labeling_matches_oracle(mask)
