@@ -53,11 +53,10 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
     # footer reads need memoizing — a test/tool that flips a conf on the
     # shared session must not leak it into later battery queries
     # (ADVICE r4: the memo-hit early return used to skip these).
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-    spark.conf.set(
-        "spark.sql.execution.rangeExchange.sampleSizePerPartition", "5000"
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    from onnxocr_spark.pipeline import WORKLOAD_SQL_CONFS
+
+    for key, value in WORKLOAD_SQL_CONFS.items():
+        spark.conf.set(key, value)
     sf = os.path.abspath(sf_dir)
     if _REGISTERED.get(spark) == sf:
         return
@@ -124,7 +123,6 @@ def _extract_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: interleaved-span extraction over sf0.001-derived docs."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
     return _extract(spark, "/root/testdata/sf0.001")
 
 

@@ -5,7 +5,8 @@
         jobs/extract_job.py \\
         --input  <documents parquet/iceberg path> \\
         --output <output root> \\
-        [--run-id r42] [--resume] [--split-stages] [--salt-partitions N]
+        [--run-id r42] [--resume] [--split-stages] [--ocr-partitions N]
+        [--rec-batch-by-image auto|true|false]
 
 Reads the interleaved documents table, skips already-committed doc_ids
 when --resume is given (ledger anti-join), runs the extraction, and
@@ -30,10 +31,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--split-stages", action="store_true")
     p.add_argument("--ocr-partitions", type=int, default=None)
     # force the per-image rec-batch contract on/off (default: auto —
-    # on exactly when the rec model is a real ONNX session). The
-    # cost-weighted balance knob (PipelineConfig.ocr_cost_col) is NOT
-    # exposed here: this job's media rows are span refs from
-    # explode_spans and carry no cost column to balance by.
+    # on exactly when the rec model is a real ONNX session)
     p.add_argument("--rec-batch-by-image", choices=["auto", "true", "false"],
                    default="auto")
     args = p.parse_args(argv)
@@ -41,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from onnxocr_spark.config import PipelineConfig
-    from onnxocr_spark.pipeline import run_extract
+    from onnxocr_spark.pipeline import WORKLOAD_SQL_CONFS, run_extract
     from onnxocr_spark.sinks.ledger import pending_documents, write_with_ledger
 
     # only stop the session if this job created it (embedding callers —
@@ -49,10 +47,8 @@ def main(argv: list[str] | None = None) -> int:
     owns_session = SparkSession.getActiveSession() is None
     spark = (
         SparkSession.builder.appName("onnxocr-extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
         .config("spark.locality.wait", "0s")
-        .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "5000")
+        .config(map=WORKLOAD_SQL_CONFS)
         .getOrCreate()
     )
     cfg = PipelineConfig(

@@ -39,17 +39,8 @@ class PipelineConfig:
     drop_score: float = 0.5
 
     # --- spark-side knobs (no reference analog; scale levers) ---
-    # rows per Arrow batch entering mapInPandas (rows carry image bytes,
-    # so keep this small; see SURVEY.md §4 "physical execution")
-    arrow_max_records: int = 32
     # partitions for the OCR stage; None → leave to AQE / input splits
     ocr_partitions: int | None = None
-    # per-item cost-hint column for the OCR stage balance: a numeric
-    # column, or a binary column (e.g. "media_bytes") meaning its byte
-    # size. When set, bins are cost-weighted (pipeline.
-    # cost_balanced_bins) instead of equal-count round-robin — opt-in
-    # because the bin join adds one exchange of the media rows.
-    ocr_cost_col: str | None = None
     # two-stage det/rec plan with crop-level redistribution (SURVEY §4.2);
     # fused single-stage is the default (no pixels cross any shuffle)
     split_stages: bool = False

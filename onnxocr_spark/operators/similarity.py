@@ -738,9 +738,18 @@ def incremental_semantic_decisions(
             (-F.col(id_col) - F.lit(1)).cast("bigint").alias(id_col),
             F.col(vec_col),
         )
+        # the disjointness above holds only for non-negative new ids: a
+        # negative one would alias a mapped committed id and silently
+        # merge with it in the CC, so fail the query instead (checked
+        # in this projection — no extra job, no extra pass)
         corpus = new_cells.select(
             F.col("cell"),
-            F.col(id_col).cast("bigint").alias(id_col),
+            F.when(
+                F.col(id_col) < 0,
+                F.raise_error(F.lit(
+                    f"fused semantic dedup needs non-negative new {id_col}"
+                )),
+            ).otherwise(F.col(id_col)).cast("bigint").alias(id_col),
             F.col(vec_col),
         ).unionByName(mapped_old)
         edges = cosine_pairs_bipartite(

@@ -129,7 +129,7 @@ def make_recognize_image_group_fn(cfg: PipelineConfig):
     """Per-image recognition (applyInPandas over (doc_id, offset)): the
     grouped map is handed EVERY crop of the image at once — Arrow batch
     boundaries cannot split an image into two rec pools (mapInPandas
-    with arrow_max_records=32 silently did exactly that for dense pages;
+    with 32-row Arrow batches silently did exactly that for dense pages;
     ADVICE r2). Crops feed in box_idx order — the reference's
     sorted_boxes order — so max_wh_ratio padding matches the fused
     stage bit-for-bit with real weights."""

@@ -376,27 +376,6 @@ def test_lang_id_ngram_spark(spark):
     assert counts.get("en", 0) > 0.9 * sum(counts.values())
 
 
-def test_ocr_accumulator_metrics(spark, docs_df):
-    from onnxocr_spark.config import DEFAULT_CONFIG
-    from onnxocr_spark.operators.metrics import make_accumulators, with_metrics
-    from onnxocr_spark.operators.ocr_media import make_ocr_media_fn, OCR_OUTPUT_SCHEMA
-    from onnxocr_spark.pipeline import explode_spans
-
-    media = explode_spans(docs_df).filter("kind = 'media'").select(
-        "doc_id", "offset", "media_ref"
-    )
-    n_media = media.count()
-    acc = make_accumulators(spark)
-    fn = with_metrics(make_ocr_media_fn(DEFAULT_CONFIG), acc)
-    out = media.mapInPandas(fn, OCR_OUTPUT_SCHEMA)
-    assert out.count() == n_media  # action drives accumulator updates
-    snap = acc.snapshot()
-    assert snap["images"] == n_media
-    assert snap["failures"] == 0
-    assert snap["udf_seconds"] > 0
-    assert snap["imgs_per_udf_second"] > 0
-
-
 def test_ivf_topk_recall(spark):
     from onnxocr_spark.operators.similarity import brute_force_topk, ivf_topk
 
@@ -684,8 +663,12 @@ def test_register_memoizes_per_session_and_sf(spark):
     queries() entry calls it, so it memoizes per (session, sf_dir):
     a repeat call with the same sf is a no-op (it must NOT clobber the
     session's current views), switching sf re-registers, and popping
-    the memo forces a reset (what view-overlaying tests must do)."""
+    the memo forces a reset (what view-overlaying tests must do). A memo
+    hit still re-applies the workload SQL confs, so a conf flipped on
+    the shared session cannot leak into later battery queries (ADVICE
+    r4)."""
     import __spark_entry__ as em
+    from onnxocr_spark.pipeline import WORKLOAD_SQL_CONFS
 
     em._REGISTERED.pop(spark, None)
     em._register(spark, "/root/testdata/sf0.1")
@@ -699,11 +682,22 @@ def test_register_memoizes_per_session_and_sf(spark):
         ).createOrReplaceTempView("embeddings")
         em._register(spark, "/root/testdata/sf0.01")  # memo hit: no reset
         assert spark.table("embeddings").count() == 1
+        for key, value in WORKLOAD_SQL_CONFS.items():
+            spark.conf.set(
+                key, "false" if value == "true" else str(int(value) + 1)
+            )
+        em._register(spark, "/root/testdata/sf0.01")  # memo hit again
+        assert spark.table("embeddings").count() == 1
+        assert {k: spark.conf.get(k) for k in WORKLOAD_SQL_CONFS} == (
+            WORKLOAD_SQL_CONFS
+        )
         em._REGISTERED.pop(spark, None)
         em._register(spark, "/root/testdata/sf0.01")  # forced reset
         assert spark.table("embeddings").count() == n2
     finally:
         em._REGISTERED.pop(spark, None)
+        for key, value in WORKLOAD_SQL_CONFS.items():
+            spark.conf.set(key, value)
 
 
 def test_embedding_oracle_float_margins():
@@ -1668,3 +1662,25 @@ def test_incremental_semantic_fused_scan_matches_two_scan_path(spark):
     # contact with committed 4), a pure new-new pair keeps its min
     # (100 over 101), isolated docs survive
     assert kept == {100, 105, 106, 107}
+
+
+def test_incremental_semantic_fused_scan_rejects_negative_new_ids(spark):
+    """The fused scan maps committed id c to -c-1, so id spaces stay
+    disjoint only for non-negative new ids. New id -1 would alias
+    committed id 0 and merge into its component; the query must fail
+    instead of returning decisions."""
+    from onnxocr_spark.operators.similarity import (
+        incremental_semantic_decisions,
+    )
+
+    schema = "vec_id long, embedding array<double>, cell long"
+    old = spark.createDataFrame(
+        [(0, [1.0, 0.0], 0), (1, [0.0, 1.0], 0)], schema
+    )
+    new = spark.createDataFrame(
+        [(-1, [0.0, 1.0], 0), (5, [1.0, 0.1], 0)], schema
+    )
+    with pytest.raises(Exception, match="non-negative new vec_id"):
+        incremental_semantic_decisions(
+            new, old, threshold=0.45, n_new=2, n_old=2
+        ).collect()

@@ -690,127 +690,6 @@ def test_run_extract_empty_input(spark):
     assert run_extract(empty).count() == 0
 
 
-def test_cost_balanced_bins_absorb_size_outliers(spark):
-    """OCR-stage cost-hint balancing (VERDICT r2 item 8): with one
-    10×-cost outlier among uniform media, per-bin TOTAL COST must stay
-    within ~1.3× across bins (round-robin on row count would load the
-    outlier's bin ~1.5×; at larger outliers arbitrarily worse)."""
-    from pyspark.sql import functions as F
-
-    from onnxocr_spark.pipeline import cost_balanced_bins
-
-    rows = [(f"d{i}", 0, 100) for i in range(64)] + [("big", 0, 1000)]
-    media = spark.createDataFrame(rows, "doc_id string, offset int, cost int")
-    bins = cost_balanced_bins(media, 4, F.col("cost"))
-    per = [
-        r.s
-        for r in media.join(bins, ["doc_id", "offset"])
-        .groupBy("_rr").agg(F.sum("cost").alias("s")).collect()
-    ]
-    assert len(per) == 4, per
-    assert max(per) / min(per) <= 1.3, per
-    # r5 (VERDICT r4 item 4): the implementation is DataFrame-native —
-    # no .rdd attribute access anywhere, Arrow-batched assignment (AST
-    # check so the docstring's own prose can't trip it)
-    import ast
-    import inspect
-    import textwrap
-    tree = ast.parse(textwrap.dedent(inspect.getsource(cost_balanced_bins)))
-    attrs = {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
-    assert "rdd" not in attrs and "mapInPandas" in attrs
-
-
-def test_cost_balanced_bins_prefix_invariant(spark):
-    """The structural guarantee of prefix-sum binning, including the
-    indivisible-outlier case a spread ratio can't express: every bin's
-    total cost minus its single largest item is ≤ the fair-share
-    quantum (total / n_part) — i.e. no bin is overfull by more than
-    one item, which is optimal for indivisible items."""
-    from pyspark.sql import functions as F
-
-    from onnxocr_spark.pipeline import cost_balanced_bins
-
-    cases = [
-        [100] * 64 + [1000],          # outlier below the quantum
-        [100] * 10 + [5000],          # outlier ABOVE the quantum
-        [2 ** (i % 11) for i in range(80)],  # exponential spread
-        [7],                           # fewer items than bins
-    ]
-    for costs in cases:
-        rows = [(f"d{i}", 0, c) for i, c in enumerate(costs)]
-        media = spark.createDataFrame(
-            rows, "doc_id string, offset int, cost int"
-        )
-        n_part = 4
-        quantum = sum(costs) / n_part
-        per = (
-            media.join(cost_balanced_bins(media, n_part, F.col("cost")),
-                       ["doc_id", "offset"])
-            .groupBy("_rr")
-            .agg(F.sum("cost").alias("s"), F.max("cost").alias("m"))
-            .collect()
-        )
-        assert 1 <= len(per) <= n_part, (costs, per)
-        for r in per:
-            assert r.s - r.m <= quantum + 1e-9, (costs, r)
-
-
-def test_cost_balanced_bins_nonstring_keys_dups_and_nulls(spark):
-    """ADVICE r3: the bin schema derives from the input's own key types
-    (a bigint doc_id corpus must work, not TypeError at toDF), a
-    duplicate (doc_id, offset) key must not multiply media rows through
-    the bin join, and a NULL-keyed row must survive with the default
-    bin instead of being dropped by the equi-join."""
-    from pyspark.sql import functions as F
-
-    from onnxocr_spark.pipeline import cost_balanced_bins
-
-    rows = [(i, 0, 100) for i in range(8)]
-    rows += [(3, 0, 100)]          # duplicate (doc_id, offset)
-    rows += [(None, 0, 100)]       # NULL key
-    media = spark.createDataFrame(
-        rows, "doc_id bigint, offset int, cost int"
-    )
-    bins = cost_balanced_bins(media, 4, F.col("cost"))
-    assert dict(bins.dtypes)["doc_id"] == "bigint"
-    # one bin row per distinct key → the left join preserves row count
-    joined = (
-        media.join(bins, ["doc_id", "offset"], "left")
-        .withColumn("_rr", F.coalesce("_rr", F.lit(0)))
-    )
-    assert joined.count() == len(rows)
-    assert joined.filter(F.col("_rr").isNull()).count() == 0
-
-
-def test_cost_balanced_ocr_equals_round_robin(spark):
-    """Placement is semantically free: the cost-weighted OCR stage
-    (ocr_cost_col on an inline-bytes corpus, binary column → byte size)
-    must produce exactly the round-robin stage's rows."""
-    from onnxocr_spark.config import PipelineConfig
-    from onnxocr_spark.datagen.render import render_media
-    from onnxocr_spark.imagecodec import encode_image
-    from onnxocr_spark.pipeline import ocr_media_spans
-
-    rows = [
-        (f"doc_{i:012d}", 0, f"inline://{i}",
-         bytearray(encode_image(render_media(f"doc_{i:012d}", 0))))
-        for i in range(8)
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id string, offset int, media_ref string, media_bytes binary"
-    )
-
-    def key(cfg):
-        return sorted(
-            (r.doc_id, r.offset, r.text, r.ok)
-            for r in ocr_media_spans(media, cfg).collect()
-        )
-
-    assert key(PipelineConfig(ocr_cost_col="media_bytes")) == key(
-        PipelineConfig()
-    )
-
-
 def test_ledger_per_partition_metrics(spark, docs_df, tmp_path):
     """Every commit records per-partition OCR metrics whose totals must
     reconcile with the run-level sidecar (north-rule lineage+metrics)."""

@@ -9,8 +9,10 @@ Tiling semantics (copy k of K, deterministic, no RNG):
               near- (not exact-) duplicates — without it every doc
               would gain 9 exact twins and the dedup-family workloads
               would measure the tiling, not the engine.
-  embeddings  vec_id re-id as above; copy k scales coordinate k by
-              1.01 so copies are near- (cos ≈ 0.9999) not exact dups.
+  embeddings  vec_id re-id as above; copy 0 is the source verbatim,
+              copy k > 0 scales coordinate k (1-based) by 1.01 so
+              copies are near- (cos ≈ 0.9999) not exact dups — hence
+              K − 1 may not exceed the embedding dimension.
   events      event_id re-id; ts shifted +k days (keeps per-day
               volumes realistic instead of 10× on the same day).
   TPC-H       carried as-is (q1/q3 are scan+agg bound and not the
@@ -49,6 +51,15 @@ def build(k: int, src: str, dst: str) -> dict:
     n_events = con.execute(
         f"SELECT COUNT(*) FROM parquet_scan('{src}/events.parquet')"
     ).fetchone()[0]
+    dim = con.execute(
+        "SELECT MIN(len(embedding)) "
+        f"FROM parquet_scan('{src}/embeddings.parquet')"
+    ).fetchone()[0]
+    if k - 1 > dim:
+        raise SystemExit(
+            f"K={k} needs {k - 1} embedding coordinates to perturb, but "
+            f"the source has dimension {dim}: copies would be exact dups"
+        )
     con.execute(f"""
     COPY (
       SELECT (c.k * {n_docs} + d.doc_id)::BIGINT AS doc_id,
@@ -66,7 +77,7 @@ def build(k: int, src: str, dst: str) -> dict:
     COPY (
       SELECT (c.k * {n_vecs} + e.vec_id)::BIGINT AS vec_id,
              list_transform(e.embedding,
-               (x, i) -> CASE WHEN i = c.k + 1 THEN x * 1.01
+               (x, i) -> CASE WHEN i = c.k THEN x * 1.01
                          ELSE x END)::FLOAT[] AS embedding,
              e.label
       FROM parquet_scan('{src}/embeddings.parquet') e,
