@@ -3565,26 +3565,12 @@ def q_ocr_boxes_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-box detail table (doc_id, offset, box_idx, text, score) from
     the two-stage plan's recognition output — the A1 zip surface at its
     native grain (box-level), before doc reassembly."""
-    from onnxocr_spark.config import PipelineConfig
-    from onnxocr_spark.operators.two_stage import (
-        make_detect_crops_fn,
-        make_recognize_crops_fn,
-        DET_OUTPUT_SCHEMA,
-        REC_OUTPUT_SCHEMA,
-        _round_robin,
-    )
+    from onnxocr_spark.config import DEFAULT_CONFIG
+    from onnxocr_spark.operators.two_stage import ocr_boxes
     from onnxocr_spark.pipeline import explode_spans
 
-    cfg = PipelineConfig()
     media = explode_spans(_derived_docs(spark, sf_dir)).filter("kind = 'media'")
-    par = spark.sparkContext.defaultParallelism
-    staged = _round_robin(media, par * 2, ["doc_id", "offset", "media_ref"]).mapInPandas(
-        make_detect_crops_fn(cfg), DET_OUTPUT_SCHEMA
-    )
-    rec = _round_robin(
-        staged.filter("box_idx >= 0"), par * 2,
-        ["doc_id", "offset", "media_ref", "box_idx", "crop"],
-    ).mapInPandas(make_recognize_crops_fn(cfg), REC_OUTPUT_SCHEMA)
+    _, rec = ocr_boxes(media, DEFAULT_CONFIG)
     return rec.select(
         "doc_id",
         F.col("offset").cast("bigint").alias("offset"),

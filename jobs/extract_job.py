@@ -6,7 +6,6 @@
         --input  <documents parquet/iceberg path> \\
         --output <output root> \\
         [--run-id r42] [--resume] [--split-stages] [--ocr-partitions N]
-        [--rec-batch-by-image auto|true|false]
 
 Reads the interleaved documents table, skips already-committed doc_ids
 when --resume is given (ledger anti-join), runs the extraction, and
@@ -30,10 +29,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--resume", action="store_true")
     p.add_argument("--split-stages", action="store_true")
     p.add_argument("--ocr-partitions", type=int, default=None)
-    # force the per-image rec-batch contract on/off (default: auto —
-    # on exactly when the rec model is a real ONNX session)
-    p.add_argument("--rec-batch-by-image", choices=["auto", "true", "false"],
-                   default="auto")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -54,10 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = PipelineConfig(
         split_stages=args.split_stages,
         ocr_partitions=args.ocr_partitions,
-        rec_batch_by_image=(
-            None if args.rec_batch_by_image == "auto"
-            else args.rec_batch_by_image == "true"
-        ),
     )
     run_id = args.run_id or time.strftime("%Y%m%d_%H%M%S")
 

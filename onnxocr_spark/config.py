@@ -39,22 +39,12 @@ class PipelineConfig:
     drop_score: float = 0.5
 
     # --- spark-side knobs (no reference analog; scale levers) ---
-    # partitions for the OCR stage; None → leave to AQE / input splits
+    # partitions for every OCR exchange; None → two per core
+    # (operators.ocr_media.balance)
     ocr_partitions: int | None = None
     # two-stage det/rec plan with crop-level redistribution (SURVEY §4.2);
     # fused single-stage is the default (no pixels cross any shuffle)
     split_stages: bool = False
-    # split-stage rec batching contract. False: crops are round-robined
-    # at crop grain and batched per Arrow batch — best balance, but rec
-    # batch membership (and thus max_wh_ratio padding) differs from the
-    # reference's per-image batching; identical output is guaranteed
-    # only for pad-insensitive models (the stubs mask zero-pad columns).
-    # True: crops group per (doc_id, offset) via applyInPandas —
-    # bit-faithful to the fused/reference contract with real ONNX rec
-    # weights, at image-grain balance. None (default): resolve to True
-    # exactly when rec_model is a real ONNX session
-    # (two_stage.resolve_rec_batch_by_image).
-    rec_batch_by_image: bool | None = None
     # model identifiers resolved by the session registry
     det_model: str = "det_stub"
     cls_model: str = "cls_stub"

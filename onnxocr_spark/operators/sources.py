@@ -21,7 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from onnxocr_spark.config import PipelineConfig, DEFAULT_CONFIG
-from onnxocr_spark.operators.ocr_media import OCR_OUTPUT_SCHEMA, make_ocr_media_fn
+from onnxocr_spark.pipeline import ocr_media_spans
 
 try:  # import-gated like models.sessions._OrtSession: absent in sandbox
     import fitz  # pymupdf
@@ -94,10 +94,11 @@ PDF_PAGES_SCHEMA = (
 def pdf_to_pages(pdfs: DataFrame, dpi: int = 200) -> DataFrame:
     """(doc_id, pdf_bytes) → one row per rasterized page
     (doc_id, page_no, media_ref, media_bytes, ok, err) — the S3 front
-    half. Bad/undecodable documents yield a single ok=false row. Page
-    images are re-encoded IMG1 so downstream stages stay format-agnostic
-    and bytes only travel doc→page locally (no shuffle here; the OCR
-    stage's own repartition balances the exploded pages)."""
+    half. Bad/undecodable documents, and documents with no pages, yield
+    a single ok=false row. Page images are re-encoded IMG1 so downstream
+    stages stay format-agnostic and bytes only travel doc→page locally
+    (no shuffle here; the OCR stage's own repartition balances the
+    exploded pages)."""
 
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -111,9 +112,10 @@ def pdf_to_pages(pdfs: DataFrame, dpi: int = 200) -> DataFrame:
                     if r.pdf_bytes is None or len(r.pdf_bytes) == 0:
                         rows.append((r.doc_id, -1, "", None, False, "empty"))
                         continue
-                    for i, page in enumerate(
-                        rasterize_pdf_bytes(bytes(r.pdf_bytes), dpi)
-                    ):
+                    pages = rasterize_pdf_bytes(bytes(r.pdf_bytes), dpi)
+                    if not pages:
+                        rows.append((r.doc_id, -1, "", None, False, "no pages"))
+                    for i, page in enumerate(pages):
                         rows.append(
                             (r.doc_id, i, f"pdf://{r.doc_id}/p{i}",
                              encode_image(page), True, "")
@@ -263,16 +265,7 @@ def ocr_binary_media(
         media = media.withColumn("doc_id", F.col("media_ref"))
     if "offset" not in cols:
         media = media.withColumn("offset", F.lit(0))
-    n_part = cfg.ocr_partitions or media.sparkSession.sparkContext.defaultParallelism * 2
-    # round-robin repartition, not range-on-modular-index: the range
-    # partitioner's sampling pass re-evaluated the child — here a
-    # byte-carrying decode pipeline — once more before the exchange
-    # (r6; see pipeline.ocr_media_spans)
-    balanced = (
-        media.select("doc_id", "offset", "media_ref", "media_bytes")
-        .repartition(n_part)
-    )
-    return balanced.mapInPandas(make_ocr_media_fn(cfg), OCR_OUTPUT_SCHEMA)
+    return ocr_media_spans(media, cfg)
 
 
 def ocr_paged_media(
@@ -280,21 +273,9 @@ def ocr_paged_media(
 ) -> DataFrame:
     """S3/A4: (doc_id, page_no, media_ref[, media_bytes]) one row per
     page → (doc_id, text) with pages joined '\\n\\n' in page order."""
-    ocrd = (
-        pages.withColumnRenamed("page_no", "offset")
-        if "offset" not in pages.columns
-        else pages
-    )
-    n_part = cfg.ocr_partitions or pages.sparkSession.sparkContext.defaultParallelism * 2
-    cols = ["doc_id", "offset", "media_ref"] + (
-        ["media_bytes"] if "media_bytes" in ocrd.columns else []
-    )
-    # round-robin, not range-on-modular-index (r6): the range sampling
-    # pass re-ran the whole upstream rasterization — every PDF page was
-    # rendered TWICE before the OCR exchange (measured as the doubled
-    # 41-task job pair in the pdf_pages_text battery trace)
-    balanced = ocrd.select(*cols).repartition(n_part)
-    out = balanced.mapInPandas(make_ocr_media_fn(cfg), OCR_OUTPUT_SCHEMA)
+    if "offset" not in pages.columns:
+        pages = pages.withColumnRenamed("page_no", "offset")
+    out = ocr_media_spans(pages, cfg)
     return out.groupBy("doc_id").agg(
         F.concat_ws(
             "\n\n",

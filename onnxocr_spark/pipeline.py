@@ -17,11 +17,9 @@ Scale notes (local[32] here; designed for 1000 executors / 100 TB):
 - Pixels never cross a shuffle: media stays a reference through the
   round-robin repartition; decode happens inside the UDF; only text +
   small metadata flow out.
-- Skew: a keyless round-robin repartition deals media rows out ±1 per
-  task, so a heavy doc's consecutive media spans land in different
-  tasks; retries are deterministic (sortBeforeRepartition) and
-  reassembly (keyed by doc_id+offset) is unaffected. AQE cannot see
-  UDF-stage cost, hence the explicit repartition.
+- Skew: the keyless round-robin repartition (ocr_media.balance) deals
+  media rows out ±1 per task. AQE cannot see UDF-stage cost, hence the
+  explicit repartition.
 - The final groupBy(doc_id) shuffles only recognized text (~KB/doc).
 - Text spans take the short path: no UDF, no extra shuffle before the
   reassembly shuffle they need anyway.
@@ -34,7 +32,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from onnxocr_spark.config import PipelineConfig, DEFAULT_CONFIG
-from onnxocr_spark.operators.ocr_media import OCR_OUTPUT_SCHEMA, make_ocr_media_fn
+from onnxocr_spark.operators.ocr_media import (
+    OCR_OUTPUT_SCHEMA,
+    balance,
+    make_ocr_media_fn,
+)
 
 # Runtime SQL confs the OCR stage and the query battery rely on, written
 # only here: build_session, jobs/extract_job.py and
@@ -66,46 +68,23 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 
 
 def ocr_media_spans(media: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """media-span rows → OCR'd rows (doc_id, offset, media_ref, text, …).
-
-    Balancing: exact round-robin (keyless ``repartition(n)``,
-    RoundRobinPartitioning). Reassembly is keyed by (doc_id, offset),
-    so placement is semantically free — round-robin is strictly
-    stronger balancing than hash-salting: per-task row counts are equal
-    (hash gives ±3σ binomial spread ≈ ±30% at bench sizes) and a heavy
-    document's consecutive media spans land in *different* partitions
-    by construction. Measured on local[16]: busy efficiency 0.77 (hash
-    salt, 4 waves) → ~1.0 (round-robin, 2 waves). Retries are stable:
-    sortBeforeRepartition (default on) pins the row→partition map.
-    r2–r5 implemented round-robin as a RANGE exchange on a modular row
-    index; r6 dropped it because the range partitioner's sampling pass
-    evaluates the child plan a second time (see the inline comment).
-    """
-    n_part = cfg.ocr_partitions or media.sparkSession.sparkContext.defaultParallelism * 2
-    cols = ["doc_id", "offset", "media_ref"] + (
-        ["media_bytes"] if "media_bytes" in media.columns else []
-    )
-    # r6 (guide §1.2): keyless round-robin repartition instead of a
-    # range exchange on a modular row index. Row placement and
-    # balance are identical (RoundRobinPartitioning deals each
-    # input partition's rows out ±1 per target; retries are
-    # deterministic via sortBeforeRepartition), but the range
-    # exchange's PARTITIONER SAMPLING pass executed the child plan
-    # a second time — for byte-carrying corpora that is a second
-    # full decode of every media row before OCR even starts, and
-    # even ref-only corpora re-ran the span derivation. One child
-    # evaluation, no sampling job, no sampling conf sensitivity.
-    balanced = media.select(*cols).repartition(n_part)
+    """media-span rows → OCR'd rows (doc_id, offset, media_ref, text, …)
+    through the one balanced exchange (ocr_media.balance) and the fused
+    UDF. Every fused OCR entry (byte rows, pages) comes through here."""
+    balanced = balance(media, ["doc_id", "offset", "media_ref"], cfg)
     return balanced.mapInPandas(make_ocr_media_fn(cfg), OCR_OUTPUT_SCHEMA)
 
 
 def reassemble(spans: DataFrame) -> DataFrame:
-    """span rows → documents, array ordered by offset, original field order."""
+    """span rows → documents, array ordered by offset, original field order.
+    A row with a null kind keeps its doc but adds no span (run_extract's
+    placeholder for a span-less doc)."""
+    span = F.struct("offset", "kind", "text", "media_ref")
     return (
         spans.groupBy("doc_id")
         .agg(
             F.sort_array(
-                F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
+                F.collect_list(F.when(F.col("kind").isNotNull(), span))
             ).alias("_spans")
         )
         .select(
@@ -128,8 +107,12 @@ def run_extract(
 ) -> DataFrame:
     """Full job: interleaved documents in → same shape out with media
     spans' text replaced by OCR results. Failed media yields text=''
-    (the span survives with kind/media_ref/offset intact)."""
-    return run_extract_from_spans(explode_spans(docs), cfg)
+    (the span survives with kind/media_ref/offset intact). A doc whose
+    spans array is empty or null comes out with an empty array, so the
+    ledger records it like any other: ``explode_outer`` gives it one
+    all-null row that rides with the text rows into reassemble."""
+    spans = docs.select("doc_id", F.explode_outer("spans").alias("span"))
+    return run_extract_from_spans(spans.select("doc_id", "span.*"), cfg)
 
 
 def run_extract_from_spans(
@@ -144,7 +127,7 @@ def run_extract_from_spans(
     split, the OCR stage, the final reassemble keyed by doc_id+offset)
     depends only on the row multiset, entering here skips one full
     corpus shuffle + sort with bit-identical output."""
-    text_rows = spans.filter(F.col("kind") != "media").select(
+    text_rows = spans.filter(~F.col("kind").eqNullSafe("media")).select(
         "doc_id", "kind", "text", "media_ref", "offset"
     )
     media_rows = spans.filter(F.col("kind") == "media")

@@ -1132,11 +1132,19 @@ def test_real_cls_onnx_contract():  # pragma: no cover - needs ORT wheel
     assert np.allclose(out.sum(axis=1), 1.0, atol=1e-3)
 
 
-def test_two_stage_rec_batch_by_image_equals_fused(spark, docs_df, extracted):
-    """rec_batch_by_image=True co-locates and batches crops per
-    (doc_id, offset) — the fused/reference per-image batching contract
+def test_two_stage_rec_batch_by_image_equals_fused(
+    spark, docs_df, extracted, monkeypatch
+):
+    """A real rec model co-locates and batches crops per (doc_id,
+    offset) — the fused/reference per-image batching contract
     (bit-faithful with real rec weights; ADVICE r1) — and must produce
-    the identical spans."""
+    the identical spans. The path is chosen on the driver at plan time,
+    so making the driver see a real model reaches it; workers still
+    load the stub."""
+    from onnxocr_spark.models import sessions
+
+    monkeypatch.setattr(sessions, "is_real_model", lambda name: True)
+
     def key(df):
         return {
             r.doc_id: [(s.kind, s.text, s.media_ref, s.offset)
@@ -1144,9 +1152,7 @@ def test_two_stage_rec_batch_by_image_equals_fused(spark, docs_df, extracted):
             for r in df.collect()
         }
 
-    split = run_extract(
-        docs_df, PipelineConfig(split_stages=True, rec_batch_by_image=True)
-    )
+    split = run_extract(docs_df, PipelineConfig(split_stages=True))
     assert key(split) == key(extracted)
 
     # group integrity (ADVICE r2): the per-image path must be a grouped
@@ -1161,8 +1167,7 @@ def test_two_stage_rec_batch_by_image_equals_fused(spark, docs_df, extracted):
 def test_rec_batch_by_image_defaults_to_real_model(spark):
     """The bit-faithful per-image batching contract must be ON whenever
     the rec session is a real ONNX model (VERDICT r2 item 7) — never
-    dependent on a flag nobody sets; stubs keep crop grain for balance;
-    an explicit setting always wins."""
+    dependent on a flag nobody sets; stubs keep crop grain for balance."""
     from onnxocr_spark.operators.two_stage import resolve_rec_batch_by_image
 
     assert resolve_rec_batch_by_image(PipelineConfig()) is False  # stub rec
@@ -1171,12 +1176,6 @@ def test_rec_batch_by_image_defaults_to_real_model(spark):
     ) is True
     assert resolve_rec_batch_by_image(
         PipelineConfig(rec_model="spark:rec.onnx")
-    ) is True
-    assert resolve_rec_batch_by_image(
-        PipelineConfig(rec_model="models/rec.onnx", rec_batch_by_image=False)
-    ) is False
-    assert resolve_rec_batch_by_image(
-        PipelineConfig(rec_batch_by_image=True)
     ) is True
 
 
@@ -1529,8 +1528,9 @@ def test_extract_main_content_heuristics():
 
 
 def test_pdf_container_truncation_yields_error_rows(spark):
-    """Truncated / lying-length containers must surface as ok=false rows
-    (struct.error / corrupt blob caught per row), never task failures."""
+    """Truncated, lying-length and zero-page containers must surface as
+    ok=false rows (struct.error / corrupt blob caught per row), never
+    task failures or vanished documents."""
     from onnxocr_spark.operators.sources import (
         encode_pages_container, pdf_to_pages,
     )
@@ -1540,13 +1540,15 @@ def test_pdf_container_truncation_yields_error_rows(spark):
         ("truncated_header", good[:6]),
         ("truncated_blob", good[: len(good) // 2]),
         ("lying_count", good[:4] + b"\xff\xff\xff\xff" + good[8:]),
+        ("zero_pages", encode_pages_container([])),
         ("ok_doc", good),
     ]
     out = {r.doc_id: r for r in pdf_to_pages(
         spark.createDataFrame(rows, "doc_id string, pdf_bytes binary")
     ).collect()}
     assert out["ok_doc"].ok and out["ok_doc"].page_no == 0
-    for bad in ("truncated_header", "truncated_blob", "lying_count"):
+    for bad in ("truncated_header", "truncated_blob", "lying_count",
+                "zero_pages"):
         assert not out[bad].ok and out[bad].page_no == -1, bad
 
 

@@ -690,6 +690,24 @@ def test_run_extract_empty_input(spark):
     assert run_extract(empty).count() == 0
 
 
+def test_spanless_docs_pass_through_and_commit(spark, tmp_path):
+    """Docs whose spans array is empty or null come out of run_extract
+    with an empty array, so the ledger records them and a resume finds
+    nothing pending."""
+    from onnxocr_spark.sinks import pending_documents, write_with_ledger
+
+    docs = spark.createDataFrame(
+        [("a", [("text", "hi", "", 0)]), ("e1", []), ("e2", None)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    out = run_extract(docs)
+    got = {r.doc_id: [tuple(s) for s in r.spans] for r in out.collect()}
+    assert got == {"a": [("text", "hi", "", 0)], "e1": [], "e2": []}
+    write_with_ledger(out, str(tmp_path / "out"), run_id="s1")
+    assert pending_documents(docs, str(tmp_path / "out")).count() == 0
+
+
 def test_ledger_per_partition_metrics(spark, docs_df, tmp_path):
     """Every commit records per-partition OCR metrics whose totals must
     reconcile with the run-level sidecar (north-rule lineage+metrics)."""

@@ -80,6 +80,44 @@ def test_ocr_exchange_carries_refs_only(spark):
     assert "media_bytes" not in pre_udf
 
 
+def test_every_ocr_entry_plans_the_one_balance_rule(spark, tmp_path):
+    """cfg.ocr_partitions sizes every OCR exchange — fused, two-stage
+    (media → detect and crops → rec), byte rows and pages — as a keyless
+    round-robin; none of them plans a range exchange."""
+    import re
+
+    from onnxocr_spark.config import PipelineConfig
+    from onnxocr_spark.datagen.documents import write_documents_parquet
+    from onnxocr_spark.operators.sources import (
+        encode_pages_container, ocr_binary_media, ocr_paged_media,
+        pdf_to_pages,
+    )
+
+    cfg = PipelineConfig(ocr_partitions=5)
+    path = str(tmp_path / "docs.parquet")
+    write_documents_parquet(path, 8)
+    docs = spark.read.parquet(path)
+    blobs = spark.createDataFrame(
+        [("m0", bytearray(b"x"))], "media_ref string, media_bytes binary")
+    pdfs = spark.createDataFrame(
+        [("p0", bytearray(encode_pages_container([])))],
+        "doc_id string, pdf_bytes binary")
+    entries = {
+        "fused": (run_extract(docs, cfg), 1),
+        "split": (run_extract(docs, PipelineConfig(
+            split_stages=True, ocr_partitions=5)), 2),
+        "binary": (ocr_binary_media(blobs, cfg), 1),
+        "paged": (ocr_paged_media(pdf_to_pages(pdfs), cfg), 1),
+    }
+    for name, (df, n_exchanges) in entries.items():
+        plan = _plan(df)
+        rr = re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)
+        # the split plan repeats the detect subtree (texts and leftovers
+        # both read it), so count distinct exchanges as a lower bound
+        assert len(rr) >= n_exchanges and set(rr) == {"5"}, (name, plan)
+        assert "rangepartitioning" not in plan.lower(), name
+
+
 def test_nested_field_pruning_on_span_table(spark, tmp_path):
     """Reading only span.kind from a materialized span table must prune
     the nested text/media_ref fields at the parquet scan."""
