@@ -34,12 +34,13 @@ def main(argv: list[str] | None = None) -> int:
                         "(sinks/bucketed.py): the band-signature "
                         "index for a text-dedup root, the committed "
                         "(cell, gb) vector layout for a semantic "
-                        "root — so future --resume runs join it "
-                        "without a committed-side shuffle")
+                        "root, the processed-ids table for an "
+                        "extraction root — so future --resume runs "
+                        "join it without a committed-side shuffle")
     p.add_argument("--bucket-index-only", action="store_true",
                    help="skip the run compaction and only (re)build "
-                        "the bucketed sigindex (requires "
-                        "--bucket-index)")
+                        "the bucketed accelerator the root's layout "
+                        "needs (requires --bucket-index)")
     args = p.parse_args(argv)
     if args.bucket_index_only and not args.bucket_index:
         p.error("--bucket-index-only requires --bucket-index N")

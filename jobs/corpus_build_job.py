@@ -42,7 +42,6 @@ already pins.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
@@ -155,29 +154,30 @@ def commit_run(spark, output_root: str, run_id: str, final_kept, retired,
     batch — exactly the mutation an append-only layout exists to
     avoid). Offsets are computed over the SCRUBBED text — the packing
     contract belongs to what training actually reads."""
-    data_dir = os.path.join(output_root, "data", f"run={run_id}")
-    final_kept.write.mode("overwrite").parquet(data_dir)
-    ledger_dir = os.path.join(output_root, "ledger", f"run={run_id}")
-    (
-        spark.read.parquet(data_dir)
-        .select("doc_id").distinct()
-        .write.mode("overwrite").parquet(ledger_dir)
-    )
     from pyspark.sql import functions as F
 
-    retired_dir = os.path.join(output_root, "retired", f"run={run_id}")
+    from onnxocr_spark.sinks.ledger import (
+        run_path, write_ledger, write_sidecar,
+    )
+
+    data_dir = run_path(output_root, "data", run_id)
+    final_kept.write.mode("overwrite").parquet(data_dir)
+    write_ledger(spark.read.parquet(data_dir), output_root, run_id)
+    retired_dir = run_path(output_root, "retired", run_id)
     retired.write.mode("overwrite").parquet(retired_dir)
     if sigindex is not None:
-        sig_dir = os.path.join(output_root, "sigindex", f"run={run_id}")
-        sigindex.write.mode("overwrite").parquet(sig_dir)
+        sigindex.write.mode("overwrite").parquet(
+            run_path(output_root, "sigindex", run_id)
+        )
     if pack_budget:
         from onnxocr_spark.operators.packing import pack_sequences
 
-        pack_dir = os.path.join(output_root, "packed", f"run={run_id}")
         pack_sequences(
             spark.read.parquet(data_dir).select("doc_id", "text"),
             budget=pack_budget,
-        ).write.mode("overwrite").parquet(pack_dir)
+        ).write.mode("overwrite").parquet(
+            run_path(output_root, "packed", run_id)
+        )
     n_in = batch.count()  # before cleanup: the cached input backs this
 
     n_kept = spark.read.parquet(data_dir).count()
@@ -191,8 +191,6 @@ def commit_run(spark, output_root: str, run_id: str, final_kept, retired,
     n_dup = int(by_reason.get("dup", 0))
     n_quality = int(by_reason.get("quality", 0))
     n_contam = int(by_reason.get("contaminated", 0))
-    side_dir = os.path.join(output_root, "metrics", "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
     metrics = {
         "run_id": run_id,
         "policy": policy,
@@ -207,8 +205,7 @@ def commit_run(spark, output_root: str, run_id: str, final_kept, retired,
         "max_tokens": max_tokens,
         "wall_clock_unix": time.time(),
     }
-    with open(os.path.join(side_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    write_sidecar(output_root, run_id, metrics)
     assert n_kept + n_dup + n_quality + n_contam == n_in
     return metrics
 
@@ -240,11 +237,11 @@ def streaming_corpus_build_sink(output_root: str, policy: str = "cc",
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     """
+    from onnxocr_spark.sinks.ledger import committed_runs
 
     def _process(batch_df, batch_id: int) -> None:
         run_id = f"s{batch_id:09d}"
-        led = os.path.join(output_root, "ledger", f"run={run_id}")
-        if os.path.exists(os.path.join(led, "_SUCCESS")):
+        if run_id in committed_runs(output_root, "ledger"):
             return  # restart replay of a committed micro-batch
         spark = batch_df.sparkSession
         final_kept, retired, cleanup, sigindex, batch = build_corpus(

@@ -215,45 +215,33 @@ def incremental_corpus(docs, output_root: str, policy: str = "cc"):
     shingling at all). Signature spaces are policy-specific, so a
     resume must use the committed runs' policy (guarded via the
     metrics sidecars, which survive compaction)."""
-    import glob
-    import os
-
     from pyspark.sql import functions as F
 
     from onnxocr_spark.operators.dedup import (
         BANDS_SQL,
         incremental_new_doc_decisions,
     )
+    from onnxocr_spark.sinks.bucketed import (
+        load_processed_parts, load_sigindex_parts,
+    )
+    from onnxocr_spark.sinks.ledger import committed_runs, sidecar_metrics
 
     spark = docs.sparkSession
-    # A dedup run's COMMIT MARKER is its sigindex dir (written last,
-    # _SUCCESS-complete): counting a mid-crash run's docs as processed
-    # while its signatures are missing would let future duplicates of
-    # them through silently, so a run contributes its ledger/retired
-    # ids AND its index only when fully committed — a crashed run
-    # contributes nothing and must be re-submitted under the SAME
-    # run-id (the job's idempotent-overwrite contract), which also
-    # replaces its orphan data dir.
-    def _committed(layout: str) -> list[str]:
-        return sorted(
-            d for d in glob.glob(
-                os.path.join(output_root, layout, "run=*")
-            )
-            if os.path.exists(os.path.join(d, "_SUCCESS"))
-        )
-
-    sig_dirs = _committed("sigindex")
-    if not sig_dirs:
+    # A dedup run's COMMIT MARKER is its sigindex dir (written last):
+    # counting a mid-crash run's docs as processed while its signatures
+    # are missing would let future duplicates of them through silently,
+    # so a run contributes its ledger/retired ids AND its index only
+    # when fully committed — a crashed run contributes nothing and must
+    # be re-submitted under the SAME run-id (the job's
+    # idempotent-overwrite contract), which also replaces its orphan
+    # data dir.
+    sig_runs = committed_runs(output_root, "sigindex")
+    if not sig_runs:
         raise SystemExit(
             "--resume: no committed sigindex under the output root; run "
             "an initial dedup (without --resume) first"
         )
-    committed_runs = {os.path.basename(d) for d in sig_dirs}
-    led_dirs = [d for d in _committed("ledger")
-                if os.path.basename(d) in committed_runs]
-    ret_dirs = [d for d in _committed("retired")
-                if os.path.basename(d) in committed_runs]
-    if not led_dirs:
+    if not set(sig_runs) & set(committed_runs(output_root, "ledger")):
         # reachable only mid-crashed compaction (sigindex dirs exist
         # whose ledgers were already dropped) — heal by re-running the
         # compaction, don't silently treat everything as unprocessed
@@ -267,51 +255,20 @@ def incremental_corpus(docs, output_root: str, policy: str = "cc"):
     # silently find no matches and under-dedup — refuse the mix. The
     # sidecars survive compaction (metrics are never consolidated), so
     # this sees the founding run's policy even on a compacted root.
-    import json
-
-    side_dir = os.path.join(output_root, "metrics", "_sidecars")
-    if os.path.isdir(side_dir):
-        prior = set()
-        for fjs in os.listdir(side_dir):
-            if fjs.startswith("run_") and fjs.endswith(".json"):
-                try:
-                    with open(os.path.join(side_dir, fjs)) as fh:
-                        prior.add(json.load(fh).get("policy"))
-                except (OSError, ValueError):
-                    pass
-        prior.discard(None)
-        if prior and prior != {policy}:
-            raise SystemExit(
-                f"--resume: policy {policy!r} does not match the "
-                f"committed runs' {sorted(prior)}"
-            )
+    prior = {m.get("policy") for m in sidecar_metrics(output_root)} - {None}
+    if prior and prior != {policy}:
+        raise SystemExit(
+            f"--resume: policy {policy!r} does not match the "
+            f"committed runs' {sorted(prior)}"
+        )
 
     # already-processed skip as chained LEFT ANTI joins over id PARTS
     # (sinks/bucketed.py): with a bucketed procids table the big part
     # anti-joins shuffle-free and pre-distincted (anti-join semantics
     # absorb duplicate build rows, so the plain-path distinct is gone
     # too — the union of parts is the exact committed id set)
-    from onnxocr_spark.sinks.bucketed import load_processed_parts
-
-    def _id_delta_dirs(run_names: list[str]) -> list[str]:
-        return [
-            d
-            for layout in ("ledger", "retired")
-            for r in run_names
-            if os.path.isdir(
-                d := os.path.join(output_root, layout, f"run={r}")
-            )
-        ]
-
-    proc_parts = load_processed_parts(
-        spark,
-        output_root,
-        "sigindex",
-        plain_dirs=led_dirs + ret_dirs,
-        committed_runs={os.path.basename(d)[len("run="):]
-                        for d in sig_dirs},
-        delta_dirs_of=_id_delta_dirs,
-    )
+    proc_parts = load_processed_parts(spark, output_root, "sigindex",
+                                      sig_runs)
     for part in proc_parts:
         docs = docs.join(part.select("doc_id"), "doc_id", "left_anti")
     docs = docs.persist()
@@ -325,9 +282,7 @@ def incremental_corpus(docs, output_root: str, policy: str = "cc"):
     # part is joined separately — a union would forfeit the bucketed
     # scan's output partitioning. Index rows may repeat across parts;
     # every consumer below absorbs duplicates (documented per policy).
-    from onnxocr_spark.sinks.bucketed import load_sigindex_parts
-
-    index_parts = load_sigindex_parts(spark, output_root, sig_dirs)
+    index_parts = load_sigindex_parts(spark, output_root, sig_runs)
 
     def _flag_hits(frame, keys: list[str]):
         """Left-join every index part on ``keys``, adding _hit0.._hitK
@@ -438,9 +393,9 @@ def main(argv: list[str] | None = None) -> int:
                         "match the committed runs' policy)")
     args = p.parse_args(argv)
 
-    import os
+    from pyspark.sql import SparkSession
 
-    from pyspark.sql import SparkSession, functions as F
+    from onnxocr_spark.sinks.ledger import run_path, write_ledger, write_sidecar
 
     owns_session = SparkSession.getActiveSession() is None
     spark = (
@@ -457,30 +412,20 @@ def main(argv: list[str] | None = None) -> int:
     else:
         kept, retired, cleanup, sigindex = cleaned_corpus(docs, args.policy)
 
-    data_dir = os.path.join(args.output, "data", f"run={run_id}")
+    data_dir = run_path(args.output, "data", run_id)
     kept.write.mode("overwrite").parquet(data_dir)
-    ledger_dir = os.path.join(args.output, "ledger", f"run={run_id}")
-    (
-        spark.read.parquet(data_dir)
-        .select("doc_id")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(ledger_dir)
-    )
-    retired_dir = os.path.join(args.output, "retired", f"run={run_id}")
+    write_ledger(spark.read.parquet(data_dir), args.output, run_id)
+    retired_dir = run_path(args.output, "retired", run_id)
     retired.select("doc_id").write.mode("overwrite").parquet(retired_dir)
     if sigindex is not None:
-        sig_dir = os.path.join(args.output, "sigindex", f"run={run_id}")
-        sigindex.write.mode("overwrite").parquet(sig_dir)
+        sigindex.write.mode("overwrite").parquet(
+            run_path(args.output, "sigindex", run_id)
+        )
     n_in = docs.count()  # before cleanup: the cached input backs this
     cleanup()  # kept/retired are materialized; release caches + view
 
     n_kept = spark.read.parquet(data_dir).count()
     n_retired = spark.read.parquet(retired_dir).count()
-    import json
-
-    side_dir = os.path.join(args.output, "metrics", "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
     metrics = {
         "run_id": run_id,
         "policy": args.policy,
@@ -490,8 +435,7 @@ def main(argv: list[str] | None = None) -> int:
         "docs_retired": n_retired,
         "wall_clock_unix": time.time(),
     }
-    with open(os.path.join(side_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    write_sidecar(args.output, run_id, metrics)
     print(f"committed dedup run {run_id}: {metrics}")
     assert n_kept + n_retired == n_in
     if owns_session:

@@ -60,18 +60,6 @@ import time
 _VIEW_SEQ = iter(range(1, 1 << 30))
 
 
-def _committed_runs(output_root: str) -> list[str]:
-    """run ids whose COMMIT MARKER (ledger dir with _SUCCESS) landed."""
-    import glob
-    import os
-
-    return sorted(
-        os.path.basename(d)[len("run="):]
-        for d in glob.glob(os.path.join(output_root, "ledger", "run=*"))
-        if os.path.exists(os.path.join(d, "_SUCCESS"))
-    )
-
-
 def initial_semantic_corpus(emb, threshold: float, n_cells: int | None):
     """(kept, retired, cellindex, cleanup) for the founding run."""
     from pyspark.sql import functions as F
@@ -124,32 +112,26 @@ def incremental_semantic_corpus(emb, output_root: str, threshold: float):
     """(kept, retired, cleanup, batch) for a --resume run: decide the
     new batch against the founding cell index and ALL committed
     vectors. Returns the post-skip batch for metrics."""
-    import glob
-    import os
-
     from pyspark.sql import functions as F
 
     from onnxocr_spark.operators.similarity import (
         incremental_semantic_decisions, seed_cells,
     )
+    from onnxocr_spark.sinks.bucketed import (
+        load_processed_parts, load_semvector_parts,
+    )
+    from onnxocr_spark.sinks.ledger import committed_runs, existing_run_dirs
 
     spark = emb.sparkSession
-    committed = set(_committed_runs(output_root))
+    # a semantic run's COMMIT MARKER is its ledger dir (written last)
+    committed = committed_runs(output_root, "ledger")
     if not committed:
         raise SystemExit(
             "--resume: no committed runs under the output root; run an "
             "initial semantic dedup (without --resume) first"
         )
 
-    def _dirs(layout: str) -> list[str]:
-        return [
-            d for d in sorted(
-                glob.glob(os.path.join(output_root, layout, "run=*"))
-            )
-            if os.path.basename(d)[len("run="):] in committed
-        ]
-
-    index_dirs = _dirs("cellindex")
+    index_dirs = existing_run_dirs(output_root, ("cellindex",), committed)
     seeds = (
         spark.read.parquet(*index_dirs)
         .dropDuplicates(["seed_id"])  # compaction may duplicate rows
@@ -163,30 +145,13 @@ def incremental_semantic_corpus(emb, output_root: str, threshold: float):
     # committed vectors never travel again; only the new batch moves.
     # Post-bucketize runs ride along as a plain parquet delta part.
     # Decisions are tiling-invariant, so parts change nothing.
-    from onnxocr_spark.sinks.bucketed import (
-        load_processed_parts, load_semvector_parts,
-    )
-
-    old_parts = load_semvector_parts(spark, output_root,
-                                     sorted(committed))
+    old_parts = load_semvector_parts(spark, output_root, committed)
     # already-processed skip: chained anti-joins over id parts — the
     # bucketed procids table (written by bucketize_semvectors, covered
     # by the same marker as the vector table) anti-joins shuffle-free;
     # the semantic ledger already holds kept ∪ retired per run
-    def _led_dirs(run_names) -> list[str]:
-        return [
-            d for r in run_names
-            if os.path.isdir(
-                d := os.path.join(output_root, "ledger", f"run={r}")
-            )
-        ]
-
-    proc_parts = load_processed_parts(
-        spark, output_root, "semvec",
-        plain_dirs=_led_dirs(sorted(committed)),
-        committed_runs=set(committed),
-        delta_dirs_of=_led_dirs,
-    )
+    proc_parts = load_processed_parts(spark, output_root, "semvec",
+                                      committed)
     batch = emb
     for part in proc_parts:
         batch = batch.join(part.select("vec_id"), "vec_id", "left_anti")
@@ -218,29 +183,27 @@ def commit_run(spark, output_root: str, run_id: str, kept, retired,
     leaves orphan dirs that contribute nothing; re-submitting the same
     run_id overwrites them, the idempotent contract). Shared by the
     spark-submit main() and the streaming sink."""
-    import json
-    import os
+    from onnxocr_spark.sinks.ledger import (
+        run_path, write_ledger, write_sidecar,
+    )
 
-    data_dir = os.path.join(output_root, "data", f"run={run_id}")
+    data_dir = run_path(output_root, "data", run_id)
     kept.write.mode("overwrite").parquet(data_dir)
-    retired_dir = os.path.join(output_root, "retired", f"run={run_id}")
+    retired_dir = run_path(output_root, "retired", run_id)
     retired.write.mode("overwrite").parquet(retired_dir)
     if cellindex is not None:
-        idx_dir = os.path.join(output_root, "cellindex", f"run={run_id}")
-        cellindex.write.mode("overwrite").parquet(idx_dir)
+        cellindex.write.mode("overwrite").parquet(
+            run_path(output_root, "cellindex", run_id)
+        )
     n_in = batch.count()
     # the ledger is the COMMIT MARKER — written last
-    ledger_dir = os.path.join(output_root, "ledger", f"run={run_id}")
-    (
+    write_ledger(
         spark.read.parquet(data_dir).select("vec_id")
-        .unionByName(spark.read.parquet(retired_dir).select("vec_id"))
-        .distinct()
-        .write.mode("overwrite").parquet(ledger_dir)
+        .unionByName(spark.read.parquet(retired_dir).select("vec_id")),
+        output_root, run_id, "vec_id",
     )
     n_kept = spark.read.parquet(data_dir).count()
     n_retired = spark.read.parquet(retired_dir).count()
-    side_dir = os.path.join(output_root, "metrics", "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
     metrics = {
         "run_id": run_id,
         "policy": "semantic",
@@ -251,8 +214,7 @@ def commit_run(spark, output_root: str, run_id: str, kept, retired,
         "docs_retired": n_retired,
         "wall_clock_unix": time.time(),
     }
-    with open(os.path.join(side_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    write_sidecar(output_root, run_id, metrics)
     assert n_kept + n_retired == n_in
     return metrics
 
@@ -286,12 +248,11 @@ def streaming_semantic_sink(output_root: str, threshold: float = 0.45):
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     """
-    import os
+    from onnxocr_spark.sinks.ledger import committed_runs
 
     def _process(batch_df, batch_id: int) -> None:
         run_id = f"s{batch_id:09d}"
-        led = os.path.join(output_root, "ledger", f"run={run_id}")
-        if os.path.exists(os.path.join(led, "_SUCCESS")):
+        if run_id in committed_runs(output_root, "ledger"):
             return  # restart replay of a committed micro-batch
         spark = batch_df.sparkSession
         kept, retired, cleanup, batch = incremental_semantic_corpus(
@@ -319,8 +280,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="treat --input as a NEW batch and dedup it "
                         "against the committed runs' cell index")
     args = p.parse_args(argv)
-
-    import os
 
     from pyspark.sql import SparkSession
 

@@ -237,22 +237,23 @@ SHINGLES_SQL = """
     WHERE size(t) >= 3
 """
 
-_CW_MINS = """MIN(pmod(hb * 921440328 + 1784546027, 2147483647)),
-             MIN(pmod(hb * 37701240 + 354508152, 2147483647)),
-             MIN(pmod(hb * 449796578 + 306530153, 2147483647)),
-             MIN(pmod(hb * 492247049 + 349390190, 2147483647)),
-             MIN(pmod(hb * 1743316459 + 1077260002, 2147483647)),
-             MIN(pmod(hb * 1166774449 + 1452085244, 2147483647)),
-             MIN(pmod(hb * 1661019430 + 410452542, 2147483647)),
-             MIN(pmod(hb * 911295768 + 1645529458, 2147483647)),
-             MIN(pmod(hb * 1647127509 + 818920737, 2147483647)),
-             MIN(pmod(hb * 1419034827 + 691191258, 2147483647)),
-             MIN(pmod(hb * 1646992099 + 1648527430, 2147483647)),
-             MIN(pmod(hb * 2024284797 + 1729037751, 2147483647)),
-             MIN(pmod(hb * 1806657237 + 1159790259, 2147483647)),
-             MIN(pmod(hb * 1066479870 + 1618275302, 2147483647)),
-             MIN(pmod(hb * 1646561307 + 1467039869, 2147483647)),
-             MIN(pmod(hb * 1967357840 + 1377743954, 2147483647))"""
+# The 16 Carter-Wegman (a, b) pairs of the minhash family: h(x) =
+# (a·x + b) mod (2^31 − 1). The streaming operator reuses this list;
+# the DuckDB oracle in __spark_entry__ spells its own copy on purpose.
+CW_PAIRS = (
+    (921440328, 1784546027), (37701240, 354508152),
+    (449796578, 306530153), (492247049, 349390190),
+    (1743316459, 1077260002), (1166774449, 1452085244),
+    (1661019430, 410452542), (911295768, 1645529458),
+    (1647127509, 818920737), (1419034827, 691191258),
+    (1646992099, 1648527430), (2024284797, 1729037751),
+    (1806657237, 1159790259), (1066479870, 1618275302),
+    (1646561307, 1467039869), (1967357840, 1377743954),
+)
+
+_CW_MINS = ",\n             ".join(
+    f"MIN(pmod(hb * {a} + {b}, 2147483647))" for a, b in CW_PAIRS
+)
 
 MINHASH_CORE_SQL = """
 SELECT doc_id,

@@ -43,6 +43,12 @@ Lifecycle (mirrors the compaction discipline in sinks/ledger.py):
 The run dirs stay the source of truth; the table is a derived
 accelerator that can be dropped and rebuilt at any time. Single-writer
 per root, like compaction.
+
+The sigindex, committed-vector and processed-ids tables share one
+lifecycle, written once below: ``_write_table`` (void the marker, drop,
+write bucketed), ``_publish`` (the marker, last), ``_read_cover`` and
+``_register`` (the session catalog forgets external tables), and
+``_load_parts`` (table + uncovered delta, or the plain dirs).
 """
 
 from __future__ import annotations
@@ -55,35 +61,188 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from onnxocr_spark.sinks.ledger import (
+    committed_runs,
+    existing_run_dirs,
+    run_path,
+)
+
 BUCKET_COLS = ("band", "band_sig")
+VEC_BUCKET_COLS = ("cell", "gb")
 _LAYOUT = "sigindex_bucketed"
+_VEC_LAYOUT = "vectors_bucketed"
+_PID_LAYOUT = "procids_bucketed"
 
 
-def sigindex_table_name(root: str) -> str:
+def _table_name(prefix: str, root: str) -> str:
     """Deterministic per-root session-catalog table name (twin roots in
     one test session must not collide)."""
     digest = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:12]
-    return f"sigindex_{digest}"
+    return f"{prefix}_{digest}"
+
+
+def sigindex_table_name(root: str) -> str:
+    return _table_name("sigindex", root)
+
+
+def semvector_table_name(root: str) -> str:
+    return _table_name("semvec", root)
+
+
+def _procids_table_name(root: str) -> str:
+    return _table_name("procids", root)
+
+
+def _layout_path(root: str, layout: str, name: str) -> str:
+    # absolute: a relative ``path`` option would resolve against the
+    # warehouse dir, landing the bucket files away from the root
+    return os.path.join(os.path.abspath(root), layout, name)
 
 
 def _marker_path(root: str) -> str:
-    return os.path.join(os.path.abspath(root), _LAYOUT, "_COVERS.json")
+    return _layout_path(root, _LAYOUT, "_COVERS.json")
+
+
+def _vec_marker_path(root: str) -> str:
+    return _layout_path(root, _VEC_LAYOUT, "_COVERS.json")
+
+
+def _extract_marker_path(root: str) -> str:
+    return _layout_path(root, _PID_LAYOUT, "_COVERS.json")
 
 
 def _data_path(root: str) -> str:
-    # absolute: a relative ``path`` option would resolve against the
-    # warehouse dir, landing the bucket files away from the root
-    return os.path.join(os.path.abspath(root), _LAYOUT, "data")
+    return _layout_path(root, _LAYOUT, "data")
 
 
-def committed_sigindex_dirs(root: str) -> list[str]:
-    """_SUCCESS-complete sigindex run dirs (the dedup job's commit
-    marker — same rule jobs/dedup_job.py applies)."""
-    return sorted(
-        d
-        for d in glob.glob(os.path.join(root, "sigindex", "run=*"))
-        if os.path.exists(os.path.join(d, "_SUCCESS"))
+# ---------------------------------------------------------------------------
+# The one lifecycle every bucketed accelerator goes through.
+# ---------------------------------------------------------------------------
+
+
+def _write_table(
+    spark: SparkSession,
+    df: DataFrame,
+    root: str,
+    layout: str,
+    table: str,
+    cols: tuple[str, ...],
+    n_buckets: int,
+    marker: str,
+) -> str:
+    """Void ``marker`` (old coverage is void the moment we rebuild),
+    drop ``table`` and its data dir, then write ``df`` bucketed and
+    sorted by ``cols``. Returns the schema DDL ``_register`` replays."""
+    if os.path.exists(marker):
+        os.remove(marker)
+    data_path = _layout_path(root, layout, "data")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    if os.path.isdir(data_path):
+        shutil.rmtree(data_path)
+    (
+        df.repartition(n_buckets, *[F.col(c) for c in cols])
+        .write.format("parquet")
+        .bucketBy(n_buckets, *cols)
+        .sortBy(*cols)
+        .option("path", data_path)
+        .mode("overwrite")
+        .saveAsTable(table)
     )
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in spark.table(table).schema.fields
+    )
+
+
+def _publish(marker: str, cover: dict) -> dict:
+    """Write the coverage marker — the commit point, always last."""
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(cover, f)
+    os.replace(tmp, marker)  # commit point
+    return cover
+
+
+def _read_cover(marker: str) -> dict | None:
+    """The marker's contents; None when it is missing or unreadable."""
+    try:
+        with open(marker) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def _register(
+    spark: SparkSession,
+    root: str,
+    layout: str,
+    table: str,
+    ddl: str,
+    cols: tuple[str, ...],
+    n_buckets: int,
+) -> bool:
+    """Re-register the external bucketed table in THIS session's
+    catalog (the default in-memory catalog does not survive restarts;
+    the parquet bucket files + marker do). Returns False if the data
+    dir is gone — caller falls back to the run dirs."""
+    data_path = _layout_path(root, layout, "data")
+    if not os.path.isdir(data_path):
+        return False
+    if not spark.catalog.tableExists(table):
+        c = ", ".join(cols)
+        spark.sql(
+            f"CREATE TABLE {table} ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({c}) SORTED BY ({c}) "
+            f"INTO {n_buckets} BUCKETS LOCATION '{data_path}'"
+        )
+    return True
+
+
+def _load_parts(
+    spark: SparkSession,
+    root: str,
+    marker: str,
+    layout: str,
+    key: str,
+    cols: tuple[str, ...],
+    runs: list[str],
+    run_layouts: tuple[str, ...],
+) -> tuple[dict | None, list[DataFrame]]:
+    """(cover, parts): when the marker's table (fields ``{key}table``,
+    ``{key}schema_ddl``) covers a subset of the committed ``runs`` and
+    registers, the table plus a plain delta of the uncovered runs'
+    ``run_layouts`` dirs; otherwise (None, [plain dirs of every run]).
+    A marker covering runs that are no longer committed (the compactor
+    renamed them) is stale and ignored. Marker runs may be spelled
+    ``run=<id>`` or ``<id>``."""
+    cover = _read_cover(marker)
+    if cover is not None and f"{key}table" in cover:
+        covered = {r[len("run="):] if r.startswith("run=") else r
+                   for r in cover.get("runs", [])}
+        committed = set(runs)
+        table = cover[f"{key}table"]
+        if (
+            covered
+            and covered <= committed
+            and _register(spark, root, layout, table,
+                          cover[f"{key}schema_ddl"], cols, cover["buckets"])
+        ):
+            parts = [spark.table(table)]
+            delta = existing_run_dirs(
+                root, run_layouts, sorted(committed - covered)
+            )
+            if delta:
+                parts.append(spark.read.parquet(*delta))
+            return cover, parts
+    return None, [
+        spark.read.parquet(*existing_run_dirs(root, run_layouts, runs))
+    ]
+
+
+# ---------------------------------------------------------------------------
+# Band-signature index (text-dedup roots).
+# ---------------------------------------------------------------------------
 
 
 def bucketize_sigindex(
@@ -94,42 +253,22 @@ def bucketize_sigindex(
     Steps (crash window analysis in the module docstring): drop any
     previous table + data, write the re-aggregated index bucketed by
     (band, band_sig), then publish the coverage marker last."""
-    sig_dirs = committed_sigindex_dirs(root)
-    if not sig_dirs:
+    runs = committed_runs(root, "sigindex")
+    if not runs:
         raise ValueError(f"no committed sigindex runs under {root}")
     table = sigindex_table_name(root)
-    data_path = _data_path(root)
-
     marker = _marker_path(root)
-    if os.path.exists(marker):
-        os.remove(marker)  # old coverage is void the moment we rebuild
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if os.path.isdir(data_path):
-        shutil.rmtree(data_path)
-
     index = (
-        spark.read.parquet(*sig_dirs)
+        spark.read.parquet(*existing_run_dirs(root, ("sigindex",), runs))
         .groupBy(*BUCKET_COLS)
         .agg(F.min("hub").alias("hub"))
-    )
-    (
-        index.repartition(n_buckets, *[F.col(c) for c in BUCKET_COLS])
-        .write.format("parquet")
-        .bucketBy(n_buckets, *BUCKET_COLS)
-        .sortBy(*BUCKET_COLS)
-        .option("path", data_path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
-    schema_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in spark.table(table).schema.fields
     )
     cover = {
         "table": table,
         "buckets": n_buckets,
-        "runs": sorted(os.path.basename(d) for d in sig_dirs),
-        "schema_ddl": schema_ddl,
+        "runs": [f"run={r}" for r in runs],
+        "schema_ddl": _write_table(spark, index, root, _LAYOUT, table,
+                                   BUCKET_COLS, n_buckets, marker),
     }
     # processed-ids twin table (covered by the SAME marker, so both
     # tables commit atomically): the resume's already-processed skip is
@@ -137,203 +276,27 @@ def bucketize_sigindex(
     # retired id — at corpus scale that id set's distinct + anti-join
     # shuffle is the other daily corpus-sized movement. Pre-distincted
     # and bucketed by doc_id it anti-joins shuffle-free.
-    run_names = {os.path.basename(d)[len("run="):] for d in sig_dirs}
-    pid_dirs = [
-        d
-        for layout in ("ledger", "retired")
-        for d in glob.glob(os.path.join(root, layout, "run=*"))
-        if os.path.basename(d)[len("run="):] in run_names
-        and os.path.exists(os.path.join(d, "_SUCCESS"))
-    ]
-    if pid_dirs:
-        cover.update(
-            _write_procids_table(spark, root, pid_dirs, "doc_id", n_buckets)
-        )
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cover, f)
-    os.replace(tmp, marker)  # commit point
-    return cover
-
-
-def _procids_table_name(root: str) -> str:
-    digest = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:12]
-    return f"procids_{digest}"
-
-
-def _procids_data_path(root: str) -> str:
-    return os.path.join(os.path.abspath(root), "procids_bucketed", "data")
-
-
-def _write_procids_table(
-    spark: SparkSession,
-    root: str,
-    id_dirs: list[str],
-    id_col: str,
-    n_buckets: int,
-) -> dict:
-    """(re)build the processed-ids table; returns the marker fields."""
-    table = _procids_table_name(root)
-    data_path = _procids_data_path(root)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if os.path.isdir(data_path):
-        shutil.rmtree(data_path)
-    ids = spark.read.parquet(*id_dirs).select(id_col).distinct()
-    (
-        ids.repartition(n_buckets, F.col(id_col))
-        .write.format("parquet")
-        .bucketBy(n_buckets, id_col)
-        .sortBy(id_col)
-        .option("path", data_path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in spark.table(table).schema.fields
-    )
-    return {
-        "procids_table": table,
-        "procids_schema_ddl": ddl,
-        "procids_id_col": id_col,
-    }
-
-
-def _ensure_procids_registered(
-    spark: SparkSession, root: str, cover: dict
-) -> bool:
-    data_path = _procids_data_path(root)
-    if "procids_table" not in cover or not os.path.isdir(data_path):
-        return False
-    table = cover["procids_table"]
-    if not spark.catalog.tableExists(table):
-        col = cover["procids_id_col"]
-        spark.sql(
-            f"CREATE TABLE {table} ({cover['procids_schema_ddl']}) "
-            f"USING PARQUET CLUSTERED BY ({col}) SORTED BY ({col}) "
-            f"INTO {cover['buckets']} BUCKETS LOCATION '{data_path}'"
-        )
-    return True
-
-
-def load_processed_parts(
-    spark: SparkSession,
-    root: str,
-    kind: str,
-    plain_dirs: list[str],
-    committed_runs: set[str],
-    delta_dirs_of,
-) -> list[DataFrame]:
-    """Processed-id parts for the already-committed skip: the bucketed
-    procids table (when the root's coverage marker is valid and carries
-    one) plus the plain id dirs of runs committed after the bucketize;
-    else one plain part. ``delta_dirs_of(uncovered_run_names)`` maps
-    uncovered run names to their id dirs. Consumers chain LEFT ANTI
-    joins over the parts (set difference against the union — exact,
-    order-independent), which keeps the bucketed part's scan
-    exchange-free and never needs a distinct: anti-join semantics
-    ignore duplicate build-side rows. ``kind`` picks which layout's
-    coverage marker governs: 'sigindex' (text roots) or 'semvec'
-    (semantic roots) or 'extract' (extraction roots, standalone
-    marker)."""
-    marker_file = {
-        "sigindex": _marker_path,
-        "semvec": _vec_marker_path,
-        "extract": _extract_marker_path,
-    }[kind](root)
-    cover = None
-    if os.path.exists(marker_file):
-        try:
-            with open(marker_file) as f:
-                cover = json.load(f)
-        except (OSError, ValueError):
-            cover = None
-    if cover is not None:
-        covered = {r[len("run="):] if r.startswith("run=") else r
-                   for r in cover.get("runs", [])}
-        if (
-            covered
-            and covered <= committed_runs
-            and _ensure_procids_registered(spark, root, cover)
-        ):
-            parts = [spark.table(cover["procids_table"])]
-            uncovered = sorted(committed_runs - covered)
-            if uncovered:
-                delta = delta_dirs_of(uncovered)
-                if delta:
-                    parts.append(spark.read.parquet(*delta))
-            return parts
-    return [spark.read.parquet(*plain_dirs)]
-
-
-def _ensure_registered(spark: SparkSession, root: str, cover: dict) -> bool:
-    """Re-register the external bucketed table in THIS session's
-    catalog (the default in-memory catalog does not survive restarts;
-    the parquet bucket files + marker do). Returns False if the data
-    dir is gone — caller falls back to the run dirs."""
-    data_path = _data_path(root)
-    if not os.path.isdir(data_path):
-        return False
-    table = cover["table"]
-    if not spark.catalog.tableExists(table):
-        cols = ", ".join(BUCKET_COLS)
-        spark.sql(
-            f"CREATE TABLE {table} ({cover['schema_ddl']}) USING PARQUET "
-            f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
-            f"INTO {cover['buckets']} BUCKETS "
-            f"LOCATION '{data_path}'"
-        )
-    return True
+    cover.update(_write_procids(spark, root, "sigindex", runs, n_buckets))
+    return _publish(marker, cover)
 
 
 def load_sigindex_parts(
-    spark: SparkSession, root: str, sig_dirs: list[str] | None = None
+    spark: SparkSession, root: str, runs: list[str] | None = None
 ) -> list[DataFrame]:
     """The index a --resume run joins against, as one or two parts:
     [bucketed table (+ parquet delta of uncovered runs)] when a valid
     coverage marker exists, else [union of the raw parquet run dirs].
+    ``runs`` are the committed sigindex run ids (default: all).
     Parts must be JOINED SEPARATELY by the consumer (a union of a
     bucketed and an unbucketed frame forfeits the scan's output
     partitioning and re-shuffles everything — the thing this module
     exists to avoid)."""
-    if sig_dirs is None:
-        sig_dirs = committed_sigindex_dirs(root)
-    if not sig_dirs:
+    if runs is None:
+        runs = committed_runs(root, "sigindex")
+    if not runs:
         raise ValueError(f"no committed sigindex runs under {root}")
-    committed = {os.path.basename(d) for d in sig_dirs}
-
-    marker = _marker_path(root)
-    cover = None
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                cover = json.load(f)
-        except (OSError, ValueError):
-            cover = None
-    if cover is not None:
-        covered = set(cover.get("runs", []))
-        if (
-            covered
-            and covered <= committed
-            and _ensure_registered(spark, root, cover)
-        ):
-            parts = [spark.table(cover["table"])]
-            uncovered = sorted(committed - covered)
-            if uncovered:
-                parts.append(
-                    spark.read.parquet(
-                        *[
-                            os.path.join(root, "sigindex", r)
-                            for r in uncovered
-                        ]
-                    )
-                )
-            return parts
-        # covered ⊄ committed: the compactor renamed runs out from
-        # under the table (or the marker is empty) — stale, ignore it
-
-    return [spark.read.parquet(*sig_dirs)]
+    return _load_parts(spark, root, _marker_path(root), _LAYOUT, "",
+                       BUCKET_COLS, runs, ("sigindex",))[1]
 
 
 # ---------------------------------------------------------------------------
@@ -350,43 +313,8 @@ def load_sigindex_parts(
 # partitioned: zero committed-side Exchange, only the new batch moves.
 # The gb split is pure tiling (any g yields the identical pair set), so
 # the accelerator is decision-invariant like the sigindex table above.
+# A semantic run is committed once its ledger (written last) is.
 # ---------------------------------------------------------------------------
-
-VEC_BUCKET_COLS = ("cell", "gb")
-_VEC_LAYOUT = "vectors_bucketed"
-
-
-def semvector_table_name(root: str) -> str:
-    digest = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:12]
-    return f"semvec_{digest}"
-
-
-def _vec_marker_path(root: str) -> str:
-    return os.path.join(os.path.abspath(root), _VEC_LAYOUT, "_COVERS.json")
-
-
-def _vec_data_path(root: str) -> str:
-    return os.path.join(os.path.abspath(root), _VEC_LAYOUT, "data")
-
-
-def committed_semantic_runs(root: str) -> list[str]:
-    """Run ids whose ledger dir (the semantic job's commit marker)
-    landed _SUCCESS-complete."""
-    return sorted(
-        os.path.basename(d)[len("run="):]
-        for d in glob.glob(os.path.join(root, "ledger", "run=*"))
-        if os.path.exists(os.path.join(d, "_SUCCESS"))
-    )
-
-
-def _vec_dirs(root: str, run_ids: list[str]) -> list[str]:
-    dirs = []
-    for layout in ("data", "retired"):
-        for r in run_ids:
-            d = os.path.join(root, layout, f"run={r}")
-            if os.path.isdir(d):
-                dirs.append(d)
-    return dirs
 
 
 def bucketize_semvectors(
@@ -401,14 +329,11 @@ def bucketize_semvectors(
     at bucketize time and recorded in the marker — resumes MUST reuse
     it (the loader hands it back) so gb assignment matches the bucket
     files."""
-    run_ids = committed_semantic_runs(root)
-    if not run_ids:
+    runs = committed_runs(root, "ledger")
+    if not runs:
         raise ValueError(f"no committed semantic runs under {root}")
-    vec_dirs = _vec_dirs(root, run_ids)
-    idx_dirs = [
-        d for d in glob.glob(os.path.join(root, "cellindex", "run=*"))
-        if os.path.basename(d)[len("run="):] in set(run_ids)
-    ]
+    vec_dirs = existing_run_dirs(root, ("data", "retired"), runs)
+    idx_dirs = existing_run_dirs(root, ("cellindex",), runs)
     if not vec_dirs or not idx_dirs:
         raise ValueError(f"{root} does not look like a semantic dedup root")
     n_cells = (
@@ -420,56 +345,24 @@ def bucketize_semvectors(
 
     table = semvector_table_name(root)
     marker = _vec_marker_path(root)
-    data_path = _vec_data_path(root)
-    if os.path.exists(marker):
-        os.remove(marker)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if os.path.isdir(data_path):
-        shutil.rmtree(data_path)
-
     pre = cells.select(
         F.col("cell"),
         F.pmod(F.col("vec_id"), F.lit(g)).cast("int").alias("gb"),
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("vec"),
     )
-    (
-        pre.repartition(n_buckets, *[F.col(c) for c in VEC_BUCKET_COLS])
-        .write.format("parquet")
-        .bucketBy(n_buckets, *VEC_BUCKET_COLS)
-        .sortBy(*VEC_BUCKET_COLS)
-        .option("path", data_path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
-    schema_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in spark.table(table).schema.fields
-    )
     cover = {
         "table": table,
         "buckets": n_buckets,
         "g": g,
-        "runs": run_ids,
-        "schema_ddl": schema_ddl,
+        "runs": runs,
+        "schema_ddl": _write_table(spark, pre, root, _VEC_LAYOUT, table,
+                                   VEC_BUCKET_COLS, n_buckets, marker),
     }
     # processed-ids twin: the semantic ledger already holds each run's
     # kept ∪ retired ids pre-distincted, so it is the procids source
-    pid_dirs = [
-        os.path.join(root, "ledger", f"run={r}")
-        for r in run_ids
-        if os.path.isdir(os.path.join(root, "ledger", f"run={r}"))
-    ]
-    if pid_dirs:
-        cover.update(
-            _write_procids_table(spark, root, pid_dirs, "vec_id", n_buckets)
-        )
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cover, f)
-    os.replace(tmp, marker)  # commit point
-    return cover
+    cover.update(_write_procids(spark, root, "semvec", runs, n_buckets))
+    return _publish(marker, cover)
 
 
 def load_semvector_parts(
@@ -482,48 +375,76 @@ def load_semvector_parts(
     the last bucketize; or a single plain part when no valid marker
     exists. Same staleness/fallback rules as the sigindex loader."""
     if run_ids is None:
-        run_ids = committed_semantic_runs(root)
+        run_ids = committed_runs(root, "ledger")
     if not run_ids:
         raise ValueError(f"no committed semantic runs under {root}")
-    committed = set(run_ids)
-
-    marker = _vec_marker_path(root)
-    cover = None
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                cover = json.load(f)
-        except (OSError, ValueError):
-            cover = None
-    if cover is not None:
-        covered = set(cover.get("runs", []))
-        data_path = _vec_data_path(root)
-        ok = covered and covered <= committed and os.path.isdir(data_path)
-        if ok:
-            table = cover["table"]
-            if not spark.catalog.tableExists(table):
-                cols = ", ".join(VEC_BUCKET_COLS)
-                spark.sql(
-                    f"CREATE TABLE {table} ({cover['schema_ddl']}) "
-                    f"USING PARQUET CLUSTERED BY ({cols}) "
-                    f"SORTED BY ({cols}) INTO {cover['buckets']} BUCKETS "
-                    f"LOCATION '{data_path}'"
-                )
-            parts: list = [(spark.table(table), int(cover["g"]))]
-            uncovered = sorted(committed - covered)
-            if uncovered:
-                parts.append(
-                    spark.read.parquet(*_vec_dirs(root, uncovered))
-                )
-            return parts
-
-    return [spark.read.parquet(*_vec_dirs(root, sorted(committed)))]
-
-
-def _extract_marker_path(root: str) -> str:
-    return os.path.join(
-        os.path.abspath(root), "procids_bucketed", "_COVERS.json"
+    cover, parts = _load_parts(
+        spark, root, _vec_marker_path(root), _VEC_LAYOUT, "",
+        VEC_BUCKET_COLS, sorted(run_ids), ("data", "retired"),
     )
+    if cover is not None:
+        parts[0] = (parts[0], int(cover["g"]))
+    return parts
+
+
+# ---------------------------------------------------------------------------
+# Processed-ids table: the already-committed skip of every root kind.
+# ---------------------------------------------------------------------------
+
+# kind → (its coverage marker, the layouts holding a run's processed
+# ids, the id column). Text-dedup and semantic roots share their index
+# table's marker; extraction roots have a standalone one.
+_PROCIDS = {
+    "sigindex": (_marker_path, ("ledger", "retired"), "doc_id"),
+    "semvec": (_vec_marker_path, ("ledger",), "vec_id"),
+    "extract": (_extract_marker_path, ("ledger",), "doc_id"),
+}
+
+
+def _write_procids(
+    spark: SparkSession, root: str, kind: str, runs: list[str],
+    n_buckets: int,
+) -> dict:
+    """(Re)build the processed-ids table from the committed id dirs of
+    ``runs``; returns its marker fields ({} when there are none)."""
+    marker, layouts, id_col = _PROCIDS[kind]
+    covered = set(runs)
+    id_dirs = [
+        run_path(root, layout, r)
+        for layout in layouts
+        for r in committed_runs(root, layout)
+        if r in covered
+    ]
+    if not id_dirs:
+        return {}
+    table = _procids_table_name(root)
+    ids = spark.read.parquet(*id_dirs).select(id_col).distinct()
+    return {
+        "procids_table": table,
+        "procids_schema_ddl": _write_table(
+            spark, ids, root, _PID_LAYOUT, table, (id_col,), n_buckets,
+            marker(root),
+        ),
+        "procids_id_col": id_col,
+    }
+
+
+def load_processed_parts(
+    spark: SparkSession, root: str, kind: str, runs: list[str]
+) -> list[DataFrame]:
+    """Processed-id parts for the already-committed skip: the bucketed
+    procids table (when the root's coverage marker is valid and carries
+    one) plus the plain id dirs of runs committed after the bucketize;
+    else one plain part. ``runs`` are the root's committed run ids.
+    Consumers chain LEFT ANTI joins over the parts (set difference
+    against the union — exact, order-independent), which keeps the
+    bucketed part's scan exchange-free and never needs a distinct:
+    anti-join semantics ignore duplicate build-side rows. ``kind``
+    picks the root kind: 'sigindex' (text roots), 'semvec' (semantic
+    roots) or 'extract' (extraction roots)."""
+    marker, layouts, id_col = _PROCIDS[kind]
+    return _load_parts(spark, root, marker(root), _PID_LAYOUT, "procids_",
+                       (id_col,), runs, layouts)[1]
 
 
 def bucketize_extraction_ids(
@@ -537,30 +458,12 @@ def bucketize_extraction_ids(
     writes) keep flowing through `committed_doc_id_parts`' plain
     orphan union, so the crash-consistency contract is untouched.
     Standalone marker (these roots have no index marker to share)."""
-    led_dirs = sorted(
-        d
-        for d in glob.glob(os.path.join(root, "ledger", "run=*"))
-        if os.path.exists(os.path.join(d, "_SUCCESS"))
-    )
-    if not led_dirs:
+    runs = committed_runs(root, "ledger")
+    if not runs:
         raise ValueError(f"no committed ledger runs under {root}")
-    marker = _extract_marker_path(root)
-    if os.path.exists(marker):
-        os.remove(marker)  # void old coverage before the rebuild
-    cover = {
-        "buckets": n_buckets,
-        "runs": sorted(os.path.basename(d)[len("run="):]
-                       for d in led_dirs),
-    }
-    cover.update(
-        _write_procids_table(spark, root, led_dirs, "doc_id", n_buckets)
-    )
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cover, f)
-    os.replace(tmp, marker)  # commit point
-    return cover
+    cover = {"buckets": n_buckets, "runs": runs}
+    cover.update(_write_procids(spark, root, "extract", runs, n_buckets))
+    return _publish(_extract_marker_path(root), cover)
 
 
 def bucketize_root(spark: SparkSession, root: str, n_buckets: int = 64) -> dict:

@@ -146,24 +146,19 @@ def annotated_images(media: "DataFrame") -> "DataFrame":
         from onnxocr_spark.imagecodec import encode_image
         from onnxocr_spark.kernels import sorted_boxes
         from onnxocr_spark.ocr.textsystem import detect_boxes
-        from onnxocr_spark.operators.media import resolve_media
+        from onnxocr_spark.operators.ocr_media import guarded
+
+        def annotate(img):
+            boxes = [np.asarray(b, dtype=np.float64)
+                     for b in sorted_boxes(detect_boxes(img))]
+            return encode_image(annotate_boxes(img, boxes)), len(boxes)
 
         for pdf in batches:
-            has_bytes = "media_bytes" in pdf.columns
             rows = []
-            for r in pdf.itertuples(index=False):
-                blob = getattr(r, "media_bytes", None) if has_bytes else None
-                img = resolve_media(r.media_ref, blob)
-                if img is None:
-                    rows.append((r.doc_id, r.offset, r.media_ref, None, -1))
-                    continue
-                boxes = [np.asarray(b, dtype=np.float64)
-                         for b in sorted_boxes(detect_boxes(img))]
-                rows.append((
-                    r.doc_id, r.offset, r.media_ref,
-                    encode_image(annotate_boxes(img, boxes)),
-                    len(boxes),
-                ))
+            for r, out, _err in guarded(pdf, annotate):
+                annotated, n_boxes = out or (None, -1)
+                rows.append((r.doc_id, r.offset, r.media_ref, annotated,
+                             n_boxes))
             yield pd.DataFrame(rows, columns=[
                 "doc_id", "offset", "media_ref", "annotated", "n_boxes"])
 

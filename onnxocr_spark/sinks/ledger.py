@@ -11,13 +11,33 @@ than the input. Commits are O(run), never O(total): nothing existing is
 rewritten, so a commit for run k costs the same at the first and the
 millionth run.
 
-With an Iceberg catalog the ledger folds into snapshot summary
-properties; the parquet layout keeps the same interface:
+This module owns the run-root layout; jobs address it only through the
+helpers below (``run_path``, ``committed_runs``, ``existing_run_dirs``,
+``write_ledger``, ``write_sidecar``, ``sidecar_metrics``). With an Iceberg
+catalog the ledger folds into snapshot summary properties; the parquet
+layout keeps the same interface:
 
-    {root}/data/run=<run_id>/…              output documents (one dir per run)
-    {root}/ledger/run=<run_id>/…            committed doc_ids for that run
-    {root}/metrics/run=<run_id>/…           per-data-file OCR metrics (parquet)
+    {root}/data/run=<id>/…                  output rows (one dir per run)
+    {root}/ledger/run=<id>/…                committed ids of that run
+    {root}/metrics/run=<id>/…               per-data-file OCR metrics
     {root}/metrics/_sidecars/run_<id>.json  per-run lineage + counters
+    {root}/retired/run=<id>/…               dedup roots: retired docs
+    {root}/sigindex/run=<id>/…              text dedup: band-signature index
+    {root}/cellindex/run=<id>/…             semantic: founding seed vectors
+    {root}/packed/run=<id>/…                corpus build: packing windows
+    {root}/_trash/<compacted id>/…          compaction sources (never read)
+    {root}/sigindex_bucketed/{data,_COVERS.json}  derived accelerators
+    {root}/vectors_bucketed/{data,_COVERS.json}   (sinks/bucketed.py);
+    {root}/procids_bucketed/data[,_COVERS.json]   the procids marker
+                                                  exists on extraction
+                                                  roots only
+
+A ``run=<id>`` dir counts only once Spark's ``_SUCCESS`` marker lands in
+it (``committed_runs``). Which layout is a job's COMMIT MARKER differs:
+extraction counts a run from its data dir (a data dir without a ledger
+is an orphan that still counts, see ``committed_doc_id_parts``); text
+dedup and corpus build from their sigindex dir, written after data,
+ledger and retired; semantic dedup from its ledger, written last.
 """
 
 from __future__ import annotations
@@ -39,13 +59,89 @@ _PART_METRICS = pa.schema([
     ("run_id", pa.string()),
 ])
 
+# dedup-root layouts that compact alongside data/ledger
+_AUX_LAYOUTS = ("retired", "sigindex", "cellindex")
 
-def _data_path(root: str) -> str:
-    return os.path.join(root, "data")
+
+def run_path(root: str, layout: str, run_id: str) -> str:
+    """``{root}/<layout>/run=<run_id>``."""
+    return os.path.join(root, layout, f"run={run_id}")
 
 
-def _ledger_path(root: str) -> str:
-    return os.path.join(root, "ledger")
+def committed_runs(root: str, layout: str) -> list[str]:
+    """Sorted ids of the committed runs of one layout: the run=<id>
+    dirs whose _SUCCESS marker landed, so a partially written dir is
+    never read. The one committed-run rule of every reader."""
+    path = os.path.join(root, layout)
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        d[len("run="):]
+        for d in names
+        if d.startswith("run=")
+        and os.path.exists(os.path.join(path, d, "_SUCCESS"))
+    )
+
+
+def existing_run_dirs(
+    root: str, layouts: tuple[str, ...], run_ids: list[str]
+) -> list[str]:
+    """The run dirs of ``run_ids`` that exist in each layout, layout by
+    layout (a run's aux dirs count with the run's own commit marker,
+    not their own _SUCCESS)."""
+    return [
+        d
+        for layout in layouts
+        for r in run_ids
+        if os.path.isdir(d := run_path(root, layout, r))
+    ]
+
+
+def write_ledger(
+    landed: DataFrame, root: str, run_id: str, id_col: str = "doc_id"
+) -> None:
+    """Write ``run_id``'s ledger partition: the distinct ids of what
+    landed on disk (idempotent wrt speculative tasks), appended, never
+    rewritten."""
+    (
+        landed.select(id_col).distinct()
+        .write.mode("overwrite").parquet(run_path(root, "ledger", run_id))
+    )
+
+
+def _sidecar_dir(root: str) -> str:
+    # JSON sidecars live under a leading-underscore subdir so a parquet
+    # scan of metrics/ never trips over them (Spark skips _-prefixed paths)
+    return os.path.join(root, "metrics", "_sidecars")
+
+
+def write_sidecar(root: str, run_id: str, metrics: dict) -> None:
+    """Write one run's JSON metrics sidecar (migrating legacy ones)."""
+    sidecar_dir = _sidecar_dir(root)
+    os.makedirs(sidecar_dir, exist_ok=True)
+    _migrate_legacy_sidecars(root, sidecar_dir)
+    with open(os.path.join(sidecar_dir, f"run_{run_id}.json"), "w") as f:
+        json.dump(metrics, f)
+
+
+def sidecar_metrics(root: str) -> list[dict]:
+    """Every readable run sidecar of the root (unreadable ones skipped)."""
+    sidecar_dir = _sidecar_dir(root)
+    try:
+        names = sorted(os.listdir(sidecar_dir))
+    except FileNotFoundError:
+        return []
+    out = []
+    for name in names:
+        if name.startswith("run_") and name.endswith(".json"):
+            try:
+                with open(os.path.join(sidecar_dir, name)) as f:
+                    out.append(json.load(f))
+            except (OSError, ValueError):
+                pass
+    return out
 
 
 def write_with_ledger(
@@ -57,16 +153,13 @@ def write_with_ledger(
     """Append one run's output + its ledger partition + a metrics
     sidecar. Returns the metrics dict."""
     spark = out.sparkSession
-    run_dir = os.path.join(_data_path(root), f"run={run_id}")
+    run_dir = run_path(root, "data", run_id)
     # overwrite: retrying a crashed run_id replaces its partial dir
     # instead of failing, so the commit is idempotent per run_id
     out.write.mode("overwrite").parquet(run_dir)
 
-    # ledger entry derived from what actually landed on disk (idempotent
-    # wrt speculative tasks), appended — never rewritten
     landed = spark.read.parquet(run_dir)
-    ledger_dir = os.path.join(_ledger_path(root), f"run={run_id}")
-    landed.select("doc_id").distinct().write.mode("overwrite").parquet(ledger_dir)
+    write_ledger(landed, root, run_id)
 
     # per-data-file metrics for this commit (north rule: every
     # partition commit records lineage + metrics), derived from what
@@ -108,8 +201,9 @@ def write_with_ledger(
         },
         schema=_PART_METRICS,
     )
-    part_dir = os.path.join(root, "metrics", f"run={run_id}")
-    spark.createDataFrame(table).write.mode("overwrite").parquet(part_dir)
+    spark.createDataFrame(table).write.mode("overwrite").parquet(
+        run_path(root, "metrics", run_id)
+    )
 
     metrics = {
         "run_id": run_id,
@@ -121,13 +215,7 @@ def write_with_ledger(
         "n_partitions": len(part),
         "wall_clock_unix": time.time(),
     }
-    # JSON sidecars live under a leading-underscore subdir so a parquet
-    # scan of metrics/ never trips over them (Spark skips _-prefixed paths)
-    sidecar_dir = os.path.join(root, "metrics", "_sidecars")
-    os.makedirs(sidecar_dir, exist_ok=True)
-    _migrate_legacy_sidecars(root, sidecar_dir)
-    with open(os.path.join(sidecar_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    write_sidecar(root, run_id, metrics)
     return metrics
 
 
@@ -176,7 +264,7 @@ def compact_runs(
     Every crash point leaves a state where no doc is readable twice
     AND no ledger-committed doc is unreadable:
       1. write consolidated data to ``data/_compact_tmp_<id>`` — the
-         underscore prefix is invisible to ``_run_dirs``/``read_output``
+         underscore prefix is invisible to ``committed_runs``
          — and verify its row count equals the sources' total;
       2. drop the SOURCE LEDGER dirs first: their data dirs then count
          as committed via committed_doc_ids' orphan rule (data without
@@ -209,20 +297,15 @@ def compact_runs(
     import shutil
 
     run_ids = sorted(run_ids if run_ids is not None
-                     else {d[len("run="):] for d in _run_dirs(_data_path(root))})
+                     else committed_runs(root, "data"))
     if not run_ids:
         raise ValueError(f"no committed runs to compact under {root}")
     compacted_id = compacted_id or f"compact_{run_ids[0]}_{run_ids[-1]}"
-    src_dirs = [os.path.join(_data_path(root), f"run={r}") for r in run_ids]
-    final_check = os.path.join(_data_path(root), f"run={compacted_id}")
-    aux_targets = [
-        os.path.join(root, layout, f"run={compacted_id}")
-        for layout in ("retired", "sigindex", "cellindex")
-    ]
-    if (
-        compacted_id in run_ids
-        or os.path.exists(final_check)
-        or any(os.path.exists(t) for t in aux_targets)
+    src_dirs = [run_path(root, "data", r) for r in run_ids]
+    final_dir = run_path(root, "data", compacted_id)
+    if compacted_id in run_ids or any(
+        os.path.exists(run_path(root, layout, compacted_id))
+        for layout in ("data",) + _AUX_LAYOUTS
     ):
         # failing BEFORE any mutation beats discovering the collision
         # at the atomic-publish rename, after source dirs moved
@@ -230,7 +313,7 @@ def compact_runs(
             f"compacted_id {compacted_id!r} collides with an existing run"
         )
 
-    tmp_dir = os.path.join(_data_path(root), f"_compact_tmp_{compacted_id}")
+    tmp_dir = os.path.join(root, "data", f"_compact_tmp_{compacted_id}")
     src = spark.read.parquet(*src_dirs)
     n_src = src.count()
     if target_partitions:
@@ -242,38 +325,27 @@ def compact_runs(
             f"compaction row mismatch: {n_src} in sources, {n_new} written"
         )
 
-    for r in run_ids:
-        old = os.path.join(_ledger_path(root), f"run={r}")
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+    for old in existing_run_dirs(root, ("ledger",), run_ids):
+        shutil.rmtree(old)
 
     trash = os.path.join(root, "_trash", compacted_id)
     os.makedirs(trash, exist_ok=True)
     for d in src_dirs:
         os.replace(d, os.path.join(trash, os.path.basename(d)))
 
-    final_dir = os.path.join(_data_path(root), f"run={compacted_id}")
     os.replace(tmp_dir, final_dir)
 
-    ledger_dir = os.path.join(_ledger_path(root), f"run={compacted_id}")
     final_df = spark.read.parquet(final_dir)
     # extraction roots ledger doc_id; the semantic dedup root's id
     # column is vec_id — pick whichever the data carries
     id_col = "doc_id" if "doc_id" in final_df.columns else "vec_id"
-    (
-        final_df.select(id_col).distinct()
-        .write.mode("overwrite").parquet(ledger_dir)
-    )
+    write_ledger(final_df, root, compacted_id, id_col)
     aux_compacted = {}
     # cellindex: the semantic job's founding seed vectors — must follow
     # the compacted run id or a post-compaction resume loses its index
-    for layout in ("retired", "sigindex", "cellindex"):
+    for layout in _AUX_LAYOUTS:
         path = os.path.join(root, layout)
-        dirs = [
-            os.path.join(path, f"run={r}")
-            for r in run_ids
-            if os.path.isdir(os.path.join(path, f"run={r}"))
-        ]
+        dirs = existing_run_dirs(root, (layout,), run_ids)
         if not dirs:
             continue
         df = spark.read.parquet(*dirs)
@@ -285,7 +357,7 @@ def compact_runs(
         df.write.mode("overwrite").parquet(aux_tmp)
         # publish first, trash after: overlap is harmless (dup-tolerant
         # unions), a gap is not (lost retired ids / signatures)
-        os.replace(aux_tmp, os.path.join(path, f"run={compacted_id}"))
+        os.replace(aux_tmp, run_path(root, layout, compacted_id))
         aux_trash = os.path.join(trash, layout)
         os.makedirs(aux_trash, exist_ok=True)
         for d in dirs:
@@ -303,111 +375,55 @@ def compact_runs(
 def read_output(spark: SparkSession, root: str) -> DataFrame:
     """All committed output rows across runs (only _SUCCESS-marked run
     dirs — a crashed run's partial files are never exposed)."""
-    runs = sorted(_run_dirs(_data_path(root)))
+    runs = committed_runs(root, "data")
     if not runs:
         raise FileNotFoundError(f"no committed runs under {root}")
-    paths = [os.path.join(_data_path(root), r) for r in runs]
-    return spark.read.parquet(*paths)
-
-
-def _run_dirs(path: str, require_success: bool = True) -> set[str]:
-    """run=<id> subdirs; by default only fully-committed ones (Spark's
-    _SUCCESS marker) so partially-written dirs are never read."""
-    try:
-        out = set()
-        for d in os.listdir(path):
-            full = os.path.join(path, d)
-            if not (d.startswith("run=") and os.path.isdir(full)):
-                continue
-            if require_success and not os.path.exists(
-                os.path.join(full, "_SUCCESS")
-            ):
-                continue
-            out.add(d)
-        return out
-    except FileNotFoundError:
-        return set()
+    return spark.read.parquet(*[run_path(root, "data", r) for r in runs])
 
 
 def committed_doc_ids(spark: SparkSession, root: str) -> DataFrame:
-    """doc_ids already extracted.
-
-    Crash consistency: a run that died between its data write and its
-    ledger write left data without a ledger entry; re-extracting those
-    docs would duplicate output rows. The data dirs are authoritative —
-    the ledger is the fast path — so doc_ids of any data run dir with
-    no ledger counterpart are unioned in (reading only those orphan
-    runs, and only their doc_id column: O(crashed runs), not O(total)).
-    """
-    sources = []
-    if _run_dirs(_ledger_path(root)):
-        sources.append(
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(_ledger_path(root))
-            .select("doc_id")
-        )
-    orphans = _run_dirs(_data_path(root)) - _run_dirs(_ledger_path(root))
-    for run in sorted(orphans):
-        try:
-            sources.append(
-                spark.read.parquet(
-                    os.path.join(_data_path(root), run)
-                ).select("doc_id")
-            )
-        except Exception:
-            pass  # partially-written dir with no readable footers: redo it
-    if not sources:
+    """doc_ids already extracted: the distinct union of
+    ``committed_doc_id_parts``."""
+    parts = committed_doc_id_parts(spark, root)
+    if not parts:
         return spark.createDataFrame([], "doc_id string")
-    out = sources[0]
-    for s in sources[1:]:
-        out = out.union(s)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.union(p)
     return out.distinct()
 
 
 def committed_doc_id_parts(
     spark: SparkSession, root: str
 ) -> list[DataFrame]:
-    """`committed_doc_ids` as PARTS for chained anti-joins: the
+    """Committed doc_ids as PARTS for chained anti-joins: the
     bucketed processed-ids table when one covers the ledgered history
     (sinks/bucketed.bucketize_extraction_ids — its scan anti-joins
     without a committed-side Exchange) plus the plain ledger dirs of
-    runs committed since, else one recursive ledger read; orphan data
-    dirs (crashed between data and ledger writes) ALWAYS ride along as
-    plain parts regardless of the marker — the data-dirs-authoritative
-    crash rule is not the accelerator's to relax. Anti-join semantics
-    absorb duplicate ids across parts, so no distinct is needed."""
-    parts: list[DataFrame] = []
-    ledgered = _run_dirs(_ledger_path(root))
+    runs committed since, else one plain ledger read. Anti-join
+    semantics absorb duplicate ids across parts, so no distinct is
+    needed.
+
+    Crash consistency: a run that died between its data write and its
+    ledger write left data without a ledger entry; re-extracting those
+    docs would duplicate output rows. The data dirs are authoritative —
+    the ledger is the fast path — so the doc_ids of every such orphan
+    data dir ALWAYS ride along as plain parts, whatever the marker says
+    (reading only those runs, and only their doc_id column: O(crashed
+    runs), not O(total))."""
+    from onnxocr_spark.sinks.bucketed import load_processed_parts
+
+    ledgered = committed_runs(root, "ledger")
+    parts = []
     if ledgered:
-        from onnxocr_spark.sinks.bucketed import load_processed_parts
-
-        def _delta(run_names):
-            return [
-                d for r in run_names
-                if os.path.isdir(
-                    d := os.path.join(_ledger_path(root), f"run={r}")
-                )
-            ]
-
-        parts.extend(
+        parts = [
             p.select("doc_id")
-            for p in load_processed_parts(
-                spark,
-                root,
-                "extract",
-                plain_dirs=[os.path.join(_ledger_path(root), r)
-                            for r in sorted(ledgered)],
-                committed_runs={r[len("run="):] for r in ledgered},
-                delta_dirs_of=_delta,
-            )
-        )
-    orphans = _run_dirs(_data_path(root)) - ledgered
-    for run in sorted(orphans):
+            for p in load_processed_parts(spark, root, "extract", ledgered)
+        ]
+    for run in sorted(set(committed_runs(root, "data")) - set(ledgered)):
         try:
             parts.append(
-                spark.read.parquet(
-                    os.path.join(_data_path(root), run)
-                ).select("doc_id")
+                spark.read.parquet(run_path(root, "data", run)).select("doc_id")
             )
         except Exception:
             pass  # partially-written dir with no readable footers: redo it

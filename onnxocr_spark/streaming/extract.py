@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from onnxocr_spark.config import PipelineConfig, DEFAULT_CONFIG
+from onnxocr_spark.operators.dedup import CW_PAIRS
 
 DOCUMENTS_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,"
@@ -119,16 +120,6 @@ NEAR_DEDUP_STATE_SCHEMA = "n long"
 # operator is disallowed) minhash over the doc's own token shingles,
 # bit-identical to the batch _MINHASH_CORE_SPARK expressions: the same
 # md5→conv base hash and the same 16 Carter-Wegman (a, b) pairs.
-_CW_PAIRS = [
-    (921440328, 1784546027), (37701240, 354508152),
-    (449796578, 306530153), (492247049, 349390190),
-    (1743316459, 1077260002), (1166774449, 1452085244),
-    (1661019430, 410452542), (911295768, 1645529458),
-    (1647127509, 818920737), (1419034827, 691191258),
-    (1646992099, 1648527430), (2024284797, 1729037751),
-    (1806657237, 1159790259), (1066479870, 1618275302),
-    (1646561307, 1467039869), (1967357840, 1377743954),
-]
 
 
 def _row_band_sigs() -> "F.Column":
@@ -158,7 +149,7 @@ def _row_band_sigs() -> "F.Column":
             F.transform(hb, lambda h: F.pmod(h * F.lit(a) + F.lit(b),
                                              F.lit(2147483647)))
         ).cast("string")
-        for a, b in _CW_PAIRS
+        for a, b in CW_PAIRS
     ]
     return F.array(*[
         F.concat_ws("|", *mins[4 * band: 4 * band + 4])

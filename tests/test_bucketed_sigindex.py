@@ -468,6 +468,49 @@ def test_semantic_degraded_states_fall_back(spark, tmp_path,
     assert isinstance(part, tuple)
 
 
+def test_semantic_ledger_without_success_is_uncommitted(spark, tmp_path,
+                                                        cleanup_tables):
+    """Crash window inside the commit marker: run r2's ledger dir exists
+    but its _SUCCESS never landed. r2 must count as uncommitted
+    everywhere — the bucketize marker leaves it out, and a resume of
+    batch 2 re-decides it exactly like a twin root whose r2 ledger dir
+    is gone entirely."""
+    import shutil
+
+    import semantic_dedup_job
+    from onnxocr_spark.sinks.bucketed import bucketize_semvectors
+
+    src1 = _vwrite(spark, tmp_path, "b1", VB1)
+    src2 = _vwrite(spark, tmp_path, "b2", [(2, VB)] + VB2)
+    root = str(tmp_path / "root")
+    assert semantic_dedup_job.main(
+        ["--input", src1, "--output", root, "--run-id", "r1",
+         "--n-cells", "2"]) == 0
+    assert semantic_dedup_job.main(
+        ["--input", src2, "--output", root, "--run-id", "r2",
+         "--resume"]) == 0
+    partial = str(tmp_path / "partial")
+    missing = str(tmp_path / "missing")
+    shutil.copytree(root, partial)
+    shutil.copytree(root, missing)
+    os.remove(f"{partial}/ledger/run=r2/_SUCCESS")
+    assert os.path.isdir(f"{partial}/ledger/run=r2")
+    shutil.rmtree(f"{missing}/ledger/run=r2")
+
+    cover = bucketize_semvectors(spark, partial, n_buckets=8)
+    assert cover["runs"] == ["r1"]
+    ids = {r.vec_id for r in spark.table(cover["procids_table"]).collect()}
+    assert ids == {0, 1, 2, 3}
+
+    for twin in (partial, missing):
+        assert semantic_dedup_job.main(
+            ["--input", src2, "--output", twin, "--run-id", "rX",
+             "--resume"]) == 0
+    assert (_vdecisions(spark, partial, "rX")
+            == _vdecisions(spark, missing, "rX")
+            == ({12}, {10, 11, 13}))
+
+
 def test_compact_job_dispatches_by_root_layout(spark, tmp_path,
                                                cleanup_tables):
     """--bucket-index auto-detects the root type: sigindex/ → band
